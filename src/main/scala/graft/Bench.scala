@@ -3,82 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Config portability legend in core/Graft.session (r19): master and
-    // shuffle.partitions=cpus are LOCAL sizing per the driver contract;
-    // every other setting below is scale-portable (except coalescing,
-    // a documented judgment call there).
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_set/collect_list/map-agg run as ObjectHashAggregate; the
-      // default sort-based fallback kicks in at 128 in-memory groups,
-      // turning every wide-key collect into a per-task sort of the whole
-      // input. Lift it to 128k groups (bounded: buffers are the collected
-      // sets themselves, which these queries bound by construction).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // Let the planner pick shuffled-hash join where its size conditions
-      // hold (the optimization guide's baseline, §3.1): the |V|-row
-      // superstep states and rollup relations of the graph/flagship
-      // families hash-build in one pass instead of paying two sort legs.
-      // r18 A/B over the 16 heaviest queries: 39.5 s -> 35.3 s best-of-3
-      // (g_clustering_coef 5.4 -> 3.1, flagship_priced 3.0 -> 2.1).
-      // Sort-merge still plans wherever a build side might not fit.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE SMJ->SHJ conversion by RUNTIME size (guide §3.1): the static
-      // preferSortMergeJoin=false above only fires when Catalyst's
-      // ESTIMATES satisfy the size conditions, and cached-relation
-      // estimates are array-inflated (a cached |V|-row adjacency prints
-      // as TiB), so the heavy iterative queries still planned sort-merge.
-      // With this threshold AQE re-plans those joins from the MEASURED
-      // per-partition map output instead — the scale-adaptive guard: a
-      // partition over 128 MB keeps its sort legs. Local slots hold 24g/32
-      // = 750 MB, a cluster sizes executor memory per core above it (or
-      // lowers the threshold). r19 A/B, both run orders: g_modularity
-      // 3.0->2.5 s, flagship_contract_map 2.9->1.7/1.9 s, g_bfs/g_lpa/
-      // g_basket_lift ~1.1-1.2x, g_jaccard/d_source_overlap flat.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
-      // AQE partition coalescing optimizes for shuffle BYTES and cannot
-      // see compute amplification past the exchange: a 400x explode or a
-      // 4.5M-group aggregate downstream of a few-MB shuffle gets packed
-      // onto 1-2 cores (g_butterfly measured 6.4s coalesced vs 2.6s not).
-      // On a real cluster at 100 TB every such shuffle exceeds the target
-      // size and coalescing is a no-op - disabling it locally only
-      // removes a small-scale artifact. Skew-join and the rest of AQE
-      // stay on.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup (untimed): touch every table once (footer reads + OS page
-    // cache) and run one small query so JIT/codegen warmup isn't billed to
-    // whichever query happens to iterate first.
-    graft.core.Graft.tableNames.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
-    // one small + one heavy representative: the flagship pipeline's
-    // generated stages populate the codegen cache, so the measured runs of
-    // the wallet-program family bill their work, not compiler warmup.
-    // The *_stored/*s queries bootstrap their persisted serving indexes
-    // here so the measured runs are the steady-state per-batch admission /
-    // probe (the stores exist in production; their one-time builds are not
-    // the recurring cost the bench tracks).
-    Seq("q1_agg", "flagship_priced_features", "d_incremental_dedup_stored",
-        "ann_ivfs", "t_bm25s", "g_basket_lift_mv", "z3_pruned_scan", "bf_pruned_scan",
-        "snap_manifest_read", "mv_incremental", "snap_delete_where",
-        "snap_update_where", "snap_merge_keys", "snap_stats_pruned",
-        "snap_merge_pruned", "snap_merge_bloom", "snap_sstats_pruned").foreach { q =>
-      try SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Graft.session(cpus)
+    warmup(spark, sfDir)
 
     // A failing query records its exception's first line so a future
     // environment break (e.g. a fixture-schema change) is diagnosable from
@@ -320,5 +247,30 @@ object Bench {
     } catch { case _: Throwable => () }
     println(fullLine)
     println(compact)
+  }
+
+  /** Untimed warmup, shared with tools.Probe: touch every table once
+    * (footer reads + OS page cache) and run representative queries so
+    * JIT/codegen warmup isn't billed to whichever query iterates first. */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
+    graft.core.Graft.tableNames.foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    }
+    // one small + one heavy representative: the flagship pipeline's
+    // generated stages populate the codegen cache, so the measured runs of
+    // the wallet-program family bill their work, not compiler warmup.
+    // The *_stored/*s queries bootstrap their persisted serving indexes
+    // here so the measured runs are the steady-state per-batch admission /
+    // probe (the stores exist in production; their one-time builds are not
+    // the recurring cost the bench tracks).
+    Seq("q1_agg", "flagship_priced_features", "d_incremental_dedup_stored",
+        "ann_ivfs", "t_bm25s", "g_basket_lift_mv", "z3_pruned_scan", "bf_pruned_scan",
+        "snap_manifest_read", "mv_incremental", "snap_delete_where",
+        "snap_update_where", "snap_merge_keys", "snap_stats_pruned",
+        "snap_merge_pruned", "snap_merge_bloom", "snap_sstats_pruned").foreach { q =>
+      try SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+    }
   }
 }

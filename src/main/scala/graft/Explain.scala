@@ -1,75 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Local plan-inspection tool: prints the executed plan and a one-line
   * exchange/window/codegen census for each named query — the iteration loop
   * for keeping plans 100 TB-shaped (`.explain` + count the shuffles).
   *
-  * Usage: runMain graft.Explain <sfDir> <query1,query2,...> [full|time]
+  * Usage: runMain graft.Explain <sfDir> <query1,query2,...> [full|fmt]
   *   full — also print the executed plan
-  *   time — run each query twice through the noop sink (cold + warm) to
-  *          split codegen/scheduling warmup from steady-state compute
+  *   fmt  — print the `.explain("formatted")` text (the plans/rNN artifact
+  *          format: numbered operator list + per-operator details)
+  * Timing lives in graft.tools.Probe.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val full = args.length > 2 && args(2) == "full"
-    val time = args.length > 2 && args(2) == "time"
-    // fmt — print the `.explain("formatted")` text (the plans/rNN artifact
-    // format: numbered operator list + per-operator details)
     val fmt = args.length > 2 && args(2) == "fmt"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // mirror the Bench/Verify session exactly — a census from a session
-    // without the engine's extensions would report plans that never run.
-    // SPARK_GRAFT_CONF (semicolon-separated k=v) overrides let an A/B
-    // reproduce an alternative planning environment (e.g. the pre-r18
-    // sort-merge-join preference) without editing this file.
-    var builder = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_set/collect_list/map-agg run as ObjectHashAggregate; the
-      // default sort-based fallback kicks in at 128 in-memory groups,
-      // turning every wide-key collect into a per-task sort of the whole
-      // input. Lift it to 128k groups (bounded: buffers are the collected
-      // sets themselves, which these queries bound by construction).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffled-hash-join preference — must mirror Bench so the reported
-      // plans are the benched plans (rationale in Bench.scala)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE SMJ->SHJ conversion by RUNTIME size (guide §3.1): the static
-      // preferSortMergeJoin=false above only fires when Catalyst's
-      // ESTIMATES satisfy the size conditions, and cached-relation
-      // estimates are array-inflated (a cached |V|-row adjacency prints
-      // as TiB), so the heavy iterative queries still planned sort-merge.
-      // With this threshold AQE re-plans those joins from the MEASURED
-      // per-partition map output instead — the scale-adaptive guard: a
-      // partition over 128 MB keeps its sort legs. Local slots hold 24g/32
-      // = 750 MB, a cluster sizes executor memory per core above it (or
-      // lowers the threshold). r19 A/B, both run orders: g_modularity
-      // 3.0->2.5 s, flagship_contract_map 2.9->1.7/1.9 s, g_bfs/g_lpa/
-      // g_basket_lift ~1.1-1.2x, g_jaccard/d_source_overlap flat.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
-      // AQE partition coalescing optimizes for shuffle BYTES and cannot
-      // see compute amplification past the exchange: a 400x explode or a
-      // 4.5M-group aggregate downstream of a few-MB shuffle gets packed
-      // onto 1-2 cores (g_butterfly measured 6.4s coalesced vs 2.6s not).
-      // On a real cluster at 100 TB every such shuffle exceeds the target
-      // size and coalescing is a no-op - disabling it locally only
-      // removes a small-scale artifact. Skew-join and the rest of AQE
-      // stay on.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder = builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // the Bench/Verify session; SPARK_GRAFT_CONF overrides reproduce an
+    // alternative planning environment (e.g. the pre-r18 sort-merge-join
+    // preference) for an A/B without editing code
+    val spark = graft.core.Graft.session(cpus, graft.core.Graft.confFromEnv)
     spark.sparkContext.setLogLevel("ERROR")
     def count(s: String, sub: String): Int = s.sliding(sub.length).count(_ == sub)
     names.foreach { name =>
@@ -84,15 +34,6 @@ object Explain {
       if (fmt) println(SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      if (time) {
-        def run(): Double = {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"   cold=${run()}%.2f warm=${run()}%.2f warm2=${run()}%.2f")
-      }
     }
     spark.stop()
   }

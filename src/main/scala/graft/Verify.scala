@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,50 +9,10 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for local iteration
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Config portability legend in core/Graft.session (r19): master and
-    // shuffle.partitions=cpus are local sizing; the rest is scale-portable.
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_set/collect_list/map-agg run as ObjectHashAggregate; the
-      // default sort-based fallback kicks in at 128 in-memory groups,
-      // turning every wide-key collect into a per-task sort of the whole
-      // input. Lift it to 128k groups (bounded: buffers are the collected
-      // sets themselves, which these queries bound by construction).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffled-hash-join preference — must mirror Bench so the verified
-      // plans are the benched plans (rationale in Bench.scala)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE SMJ->SHJ conversion by RUNTIME size (guide §3.1): the static
-      // preferSortMergeJoin=false above only fires when Catalyst's
-      // ESTIMATES satisfy the size conditions, and cached-relation
-      // estimates are array-inflated (a cached |V|-row adjacency prints
-      // as TiB), so the heavy iterative queries still planned sort-merge.
-      // With this threshold AQE re-plans those joins from the MEASURED
-      // per-partition map output instead — the scale-adaptive guard: a
-      // partition over 128 MB keeps its sort legs. Local slots hold 24g/32
-      // = 750 MB, a cluster sizes executor memory per core above it (or
-      // lowers the threshold). r19 A/B, both run orders: g_modularity
-      // 3.0->2.5 s, flagship_contract_map 2.9->1.7/1.9 s, g_bfs/g_lpa/
-      // g_basket_lift ~1.1-1.2x, g_jaccard/d_source_overlap flat.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
-      // AQE partition coalescing optimizes for shuffle BYTES and cannot
-      // see compute amplification past the exchange: a 400x explode or a
-      // 4.5M-group aggregate downstream of a few-MB shuffle gets packed
-      // onto 1-2 cores (g_butterfly measured 6.4s coalesced vs 2.6s not).
-      // On a real cluster at 100 TB every such shuffle exceeds the target
-      // size and coalescing is a no-op - disabling it locally only
-      // removes a small-scale artifact. Skew-join and the rest of AQE
-      // stay on.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // the benched session, with no overrides: the verified plans ARE the
+    // benched plans
+    val spark = graft.core.Graft.session(cpus)
     new java.io.File(outDir).mkdirs()
     // failures also land in <outDir>/errors.json (query -> first exception
     // line) so a broken round is diagnosable from the artifacts alone

@@ -8,96 +8,113 @@ import org.apache.spark.sql.types._
   *
   * The engine targets a multi-executor cluster; locally it runs `local[N]`.
   * Scale-relevant defaults (AQE, shuffle partitions sized to cores, UTC) are
-  * set here so every query sees the same physical-planning environment.
+  * set here, in the only session builder, so every query sees the same
+  * physical-planning environment.
   */
 object Graft {
 
-  /** Build a session tuned for the local harness but with cluster-honest
-    * settings: AQE on (runtime re-plan + skew-join handling), broadcast
-    * threshold left at default, shuffle partitions = cores (the harness
-    * machine), UTC timezone for oracle parity.
-    *
-    * PORTABILITY (r19, so a cluster port doesn't cargo-cult local sizing).
-    * Scale-portable — ship these to a cluster as-is:
-    *   adaptive.enabled, adaptive.skewJoin.enabled,
-    *   join.preferSortMergeJoin=false, objectHashAggregate fallback
-    *   threshold, requireAllClusterKeysForCoPartition=false, UTC,
-    *   nanosAsLong, partitionColumnTypeInference=false.
-    * Local-only sizing — REVISIT on a cluster:
-    *   master local[N] (cluster: spark-submit), shuffle.partitions=cores
-    *   (cluster: size for 100 MB-1 GB post-shuffle partitions, guide
-    *   §2.2, and let AQE coalesce), the 24g/-XX:+UseParallelGC JVM in
-    *   build.sbt (cluster: spark.executor.memory / GC per executor).
-    * Judgment call — adaptive.coalescePartitions=false: at this SF
-    * coalescing packs explode-amplifying stages onto 1-2 cores (comment
-    * below); at real scale those shuffles exceed the advisory size and
-    * coalescing is a no-op, but a cluster port handling MIXED sizes
-    * should re-enable it and re-measure the explode paths.
+  /** Scale-portable settings (PORTABILITY, r19) — ship these to a
+    * cluster as-is; only [[localSizing]] is local. Judgment call —
+    * adaptive.coalescePartitions=false: at this SF coalescing packs
+    * explode-amplifying stages onto 1-2 cores (comment below); at real
+    * scale those shuffles exceed the advisory size and coalescing is a
+    * no-op, but a cluster port handling MIXED sizes should re-enable it
+    * and re-measure the explode paths.
     */
-  def session(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
+  val portableConf: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    // Coalescing optimizes for shuffle BYTES and cannot see compute
+    // amplification past the exchange: a 400x explode or a multi-M-group
+    // aggregate downstream of a few-MB shuffle gets packed onto 1-2
+    // cores (g_butterfly: 6.4s coalesced vs 2.6s not). At 100 TB every
+    // such shuffle exceeds the target size and coalescing is a no-op,
+    // so disabling it locally only removes a small-scale artifact.
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // AQE SMJ->SHJ conversion by RUNTIME size (guide §3.1): the static
+    // preferSortMergeJoin=false below only fires when Catalyst's
+    // ESTIMATES satisfy the size conditions, and cached-relation
+    // estimates are array-inflated (a cached |V|-row adjacency prints
+    // as TiB), so the heavy iterative queries still planned sort-merge.
+    // With this threshold AQE re-plans those joins from the MEASURED
+    // per-partition map output instead — the scale-adaptive guard: a
+    // partition over 128 MB keeps its sort legs. Local slots hold 24g/32
+    // = 750 MB, a cluster sizes executor memory per core above it (or
+    // lowers the threshold). r19 A/B, both run orders: g_modularity
+    // 3.0->2.5 s, flagship_contract_map 2.9->1.7/1.9 s, g_bfs/g_lpa/
+    // g_basket_lift ~1.1-1.2x, g_jaccard/d_source_overlap flat.
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "134217728",
+    "spark.sql.session.timeZone" -> "UTC",
+    // collect_set/collect_list/map-agg run as ObjectHashAggregate; the
+    // default sort-based fallback kicks in at 128 in-memory groups,
+    // turning every wide-key collect into a per-task sort of the whole
+    // input. Lift it to 128k groups (bounded: buffers are the collected
+    // sets themselves, which these queries bound by construction).
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "131072",
+    // events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
+    // reader rejects; read as long nanos and convert explicitly (the
+    // DuckDB oracle truncates the same column to micros — parity is at
+    // microsecond resolution via `ts div 1000`).
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // 256-bucket hive partitions are 2-hex-char strings ("07", "0a"):
+    // without this, an all-digit sample infers IntegerType and rewrites
+    // partition values ("07" -> 7), breaking partition-dir stability.
+    "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false",
+    // Subset co-partitioning for joins: the features/serving tables are
+    // bucketed on the wallet key alone while their MERGEs join on
+    // (wallet, contract) — with this ON (the default) such a join
+    // re-shuffles BOTH wallet-bucketed sides on the full key set. The
+    // skew caveat the default guards against is handled the reference's
+    // way (whale-wallet exclusion) + AQE skew-join on the plain paths.
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+    // Let the planner pick shuffled-hash join where its size conditions
+    // hold (the optimization guide's baseline, §3.1): one hash build
+    // instead of two sort legs for the |V|-row superstep states and
+    // rollup relations. r18 A/B on the 16 heaviest bench queries:
+    // 39.5 s -> 35.3 s. Sort-merge still plans where a build side
+    // might not fit its partition's memory.
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    "spark.ui.enabled" -> "false")
+
+  /** Local-only sizing — REVISIT on a cluster: master local[N] (cluster:
+    * spark-submit) and shuffle.partitions = cores (cluster: size for
+    * 100 MB-1 GB post-shuffle partitions, guide §2.2, and let AQE
+    * coalesce). The 24g/-XX:+UseParallelGC JVM in build.sbt is local too
+    * (cluster: spark.executor.memory / GC per executor). */
+  def localSizing(cpus: Int): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString)
+
+  /** The one session builder: every entry point, tool and test session
+    * comes from here, so the verified, benched and spec-pinned plans are
+    * planned under the same [[portableConf]] by construction. `overrides`
+    * is for what a caller genuinely owns — a test's temp warehouse, the
+    * persistent catalog's metastore, an A/B variant from
+    * [[confFromEnv]] — and wins over the defaults key by key.
+    */
+  def session(cpus: Int = Runtime.getRuntime.availableProcessors(),
+      overrides: Map[String, String] = Map.empty): SparkSession = {
+    val spark = SparkSession.builder().appName("graft")
       .withExtensions(new graft.plans.GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Coalescing optimizes for shuffle BYTES and cannot see compute
-      // amplification past the exchange: a 400x explode or a multi-M-group
-      // aggregate downstream of a few-MB shuffle gets packed onto 1-2
-      // cores (g_butterfly: 6.4s coalesced vs 2.6s not). At 100 TB every
-      // such shuffle exceeds the target size and coalescing is a no-op,
-      // so disabling it locally only removes a small-scale artifact.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE SMJ->SHJ conversion by RUNTIME size (guide §3.1): the static
-      // preferSortMergeJoin=false above only fires when Catalyst's
-      // ESTIMATES satisfy the size conditions, and cached-relation
-      // estimates are array-inflated (a cached |V|-row adjacency prints
-      // as TiB), so the heavy iterative queries still planned sort-merge.
-      // With this threshold AQE re-plans those joins from the MEASURED
-      // per-partition map output instead — the scale-adaptive guard: a
-      // partition over 128 MB keeps its sort legs. Local slots hold 24g/32
-      // = 750 MB, a cluster sizes executor memory per core above it (or
-      // lowers the threshold). r19 A/B, both run orders: g_modularity
-      // 3.0->2.5 s, flagship_contract_map 2.9->1.7/1.9 s, g_bfs/g_lpa/
-      // g_basket_lift ~1.1-1.2x, g_jaccard/d_source_overlap flat.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_set/collect_list/map-agg run as ObjectHashAggregate; the
-      // default sort-based fallback kicks in at 128 in-memory groups,
-      // turning every wide-key collect into a per-task sort of the whole
-      // input. Lift it to 128k groups (bounded: buffers are the collected
-      // sets themselves, which these queries bound by construction).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
-      // reader rejects; read as long nanos and convert explicitly (the
-      // DuckDB oracle truncates the same column to micros — parity is at
-      // microsecond resolution via `ts div 1000`).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 256-bucket hive partitions are 2-hex-char strings ("07", "0a"):
-      // without this, an all-digit sample infers IntegerType and rewrites
-      // partition values ("07" -> 7), breaking partition-dir stability.
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      // Subset co-partitioning for joins: the features/serving tables are
-      // bucketed on the wallet key alone while their MERGEs join on
-      // (wallet, contract) — with this ON (the default) such a join
-      // re-shuffles BOTH wallet-bucketed sides on the full key set. The
-      // skew caveat the default guards against is handled the reference's
-      // way (whale-wallet exclusion) + AQE skew-join on the plain paths.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // Let the planner pick shuffled-hash join where its size conditions
-      // hold (the optimization guide's baseline, §3.1): one hash build
-      // instead of two sort legs for the |V|-row superstep states and
-      // rollup relations. r18 A/B on the 16 heaviest bench queries:
-      // 39.5 s -> 35.3 s. Sort-merge still plans where a build side
-      // might not fit its partition's memory.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
+      .config((localSizing(cpus) ++ portableConf ++ overrides).toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** `SPARK_GRAFT_CONF` (semicolon-separated `k=v` pairs): an alternative
+    * planning environment for an A/B, read only by the Explain and Probe
+    * tools — Bench and Verify always run the plain [[session]]. */
+  def confFromEnv: Map[String, String] =
+    sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
+      .map { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => k.trim -> v.trim
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
+        }
+      }.toMap
 
   /** The driver-provided synthetic tables (TESTDATA.md). */
   val tableNames: Seq[String] = Seq(

@@ -29,37 +29,15 @@ object PersistentCatalog {
     * files under `warehouse`. Two JVMs pointing at the same pair see the
     * same catalog — the restart contract CatalogPersistenceSpec proves.
     */
-  def session(warehouse: String, metastoreDb: String, cpus: Int = 4): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-catalog")
-      .withExtensions(new graft.plans.GraftExtensions())
-      .enableHiveSupport()
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$metastoreDb;create=true")
+  def session(warehouse: String, metastoreDb: String, cpus: Int = 4): SparkSession =
+    Graft.session(cpus, Map(
+      "spark.sql.catalogImplementation" -> "hive",
+      "spark.sql.warehouse.dir" -> warehouse,
+      "spark.hadoop.javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$metastoreDb;create=true",
       // partition predicates prune at the METASTORE, so planning cost
       // follows the touched partitions, not the table's partition count
-      .config("spark.sql.hive.metastorePartitionPruning", "true")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition coalescing optimizes for shuffle BYTES and cannot
-      // see compute amplification past the exchange: a 400x explode or a
-      // 4.5M-group aggregate downstream of a few-MB shuffle gets packed
-      // onto 1-2 cores (g_butterfly measured 6.4s coalesced vs 2.6s not).
-      // On a real cluster at 100 TB every such shuffle exceeds the target
-      // size and coalescing is a no-op - disabling it locally only
-      // removes a small-scale artifact. Skew-join and the rest of AQE
-      // stay on.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+      "spark.sql.hive.metastorePartitionPruning" -> "true"))
 
   /** Register `df` as a MANAGED bucketed table `db.table` — definition AND
     * bucketing spec go to the metastore, so post-restart joins on

@@ -34,7 +34,8 @@ import org.apache.spark.sql.functions._
 object TokenPacking {
 
   /** Add `chunkCol` = the packed chunk id. `orderCol` must be integral
-    * and unique within each `partCol` group (the doc_id contract). */
+    * and unique within each `partCol` group (the doc_id contract); when it
+    * is null on every row the chunk id is null. */
   def packChunks(df: DataFrame, partCol: String, orderCol: String,
       tokensCol: String, budget: Long, chunkCol: String = "chunk_id",
       buckets: Int = 64): DataFrame = {
@@ -56,7 +57,7 @@ object TokenPacking {
       .withColumn("_pk_bkt",
         expr(s"(cast($orderCol as bigint) - _pk_mn) div " +
           s"((_pk_mx - _pk_mn + ${buckets}L) div ${buckets}L)"))
-      .drop("_pk_mn", "_pk_mx")
+      .drop("_pk_mx")
     val offs = b.groupBy(col(partCol), col("_pk_bkt"))
       .agg(sum(col(tokensCol).cast("long")).as("_pk_sum"))
       .withColumn("_pk_off", coalesce(
@@ -83,7 +84,11 @@ object TokenPacking {
       // `prefix_tokens div budget` must stay exact at any magnitude
       .withColumn("_pk_prefix",
         col("_pk_off") + sum(col(tokensCol)).over(w) - col(tokensCol))
-      .withColumn(chunkCol, expr(s"_pk_prefix div ${budget}L"))
-      .drop("_pk_bkt", "_pk_bkt2", "_pk_grp", "_pk_off", "_pk_prefix")
+      // an all-null orderCol has no order to pack by (null bounds): the
+      // within-bucket window order would be arbitrary, so the chunk id is
+      // null rather than a nondeterministic packing
+      .withColumn(chunkCol,
+        when(col("_pk_mn").isNotNull, expr(s"_pk_prefix div ${budget}L")))
+      .drop("_pk_mn", "_pk_bkt", "_pk_bkt2", "_pk_grp", "_pk_off", "_pk_prefix")
   }
 }

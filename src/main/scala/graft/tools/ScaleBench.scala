@@ -98,21 +98,7 @@ object ScaleBench {
       else if (args.length > 2)
         args.drop(2).toSeq.filter(graft.SparkEntry.queries.contains)
       else Panel
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // match the engine sessions: no AQE partition coalescing (see Graft.session)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val scaled = s"${System.getProperty("java.io.tmpdir")}/graft_scalebench/" +
       base.replaceAll("[^a-zA-Z0-9]", "_") + s"_x$factor"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Child process of JoinMaterializedViewSpec's two-sided delta race: a
@@ -15,15 +14,8 @@ object ForkedBaseAppenderMain {
     val n = nStr.toInt
     val factStart = factStartStr.toInt
     val dimStart = dimStartStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-forked-base-appender")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-forked-wh").toString)
-      .getOrCreate()
+    val spark = graft.core.Graft.session(2, Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-forked-wh").toString))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     try {

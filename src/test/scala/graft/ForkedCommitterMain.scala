@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Child process of ManifestSnapshotSpec's cross-PROCESS commit race: a
   * SEPARATE JVM (own FileSystem instances, own locks) appending tagged
   * single-row deltas to a shared local snapshot store through the public
@@ -11,15 +9,8 @@ object ForkedCommitterMain {
   def main(args: Array[String]): Unit = {
     val Array(dir, tag, nStr) = args.take(3)
     val n = nStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-forked-committer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-forked-wh").toString)
-      .getOrCreate()
+    val spark = graft.core.Graft.session(2, Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-forked-wh").toString))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     try {

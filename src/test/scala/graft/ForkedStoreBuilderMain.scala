@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Child process of StoreRootsSpec's cross-PROCESS publish race: a SEPARATE
@@ -15,15 +14,8 @@ import org.apache.spark.sql.functions._
 object ForkedStoreBuilderMain {
   def main(args: Array[String]): Unit = {
     val Array(root, tag, syncDir, resultFile) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-forked-store-builder")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-forked-wh").toString)
-      .getOrCreate()
+    val spark = graft.core.Graft.session(2, Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-forked-wh").toString))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     try {

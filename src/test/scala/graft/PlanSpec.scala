@@ -182,12 +182,25 @@ class PlanSpec extends SparkSpec {
     // before AQE dedupes it). Structurally: every such exchange's child
     // must be the partial min/max aggregate — anything else would be a
     // real single-partition data path.
-    val lines = p.linesIterator.toSeq
-    lines.zipWithIndex.filter(_._1.contains("Exchange SinglePartition")).foreach {
-      case (_, i) =>
-        val child = lines.drop(i + 1).find(_.trim.nonEmpty).getOrElse("")
-        assert(child.contains("HashAggregate") && child.contains("partial_min"),
-          s"non-scalar SinglePartition exchange at line $i:\n$p")
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Min, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def unwrap(c: SparkPlan): SparkPlan = c match {
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
+      case other => other
+    }
+    planNodes(SparkEntry.queries("t_token_pack")(spark, sf)).foreach {
+      case x: ShuffleExchangeExec if x.outputPartitioning == SinglePartition =>
+        val scalarBounds = unwrap(x.child) match {
+          case h: HashAggregateExec => h.aggregateExpressions.exists(a =>
+            a.mode == Partial && a.aggregateFunction.isInstanceOf[Min])
+          case _ => false
+        }
+        assert(scalarBounds, s"non-scalar SinglePartition exchange:\n$x")
+      case _ => ()
     }
     val dataExchanges = p.linesIterator
       .filter(l => l.contains("Exchange hashpartitioning(lang"))

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session — specs run in
@@ -15,61 +19,41 @@ trait SparkSpec extends AnyFunSuite {
     d.toString
   }
 
-  /** Shuffle exchanges in the EXECUTED (AQE-final) physical plan; with
-    * `onKey`, only hash exchanges whose partitioning references that column
-    * (the "did we re-shuffle on the bucket key" probe). Cached inputs count
-    * as leaves — their interior exchanges ran once at cache time, not here. */
-  def countShuffles(df: org.apache.spark.sql.DataFrame,
-      onKey: Option[String] = None): Int = {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  /** Every node of the EXECUTED (AQE-final) physical plan, descending into
+    * subqueries, adaptive plans and query stages. Cached inputs are leaves —
+    * their interior exchanges ran once at cache time, not here. */
+  def planNodes(df: DataFrame): Seq[SparkPlan] = {
     df.collect() // force AQE to finalize the physical plan
-    def hits(p: org.apache.spark.sql.execution.SparkPlan): Int = (p match {
-      case s: ShuffleExchangeExec => onKey match {
-        case None => 1
-        case Some(k) => s.outputPartitioning match {
-          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-              if h.expressions.exists(_.references.exists(_.name == k)) => 1
-          case _ => 0
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p.children ++ p.subqueries ++ (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _ => Nil
+    })).flatMap(walk)
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Shuffle exchanges in the executed plan ([[planNodes]]); with `onKey`,
+    * only hash exchanges whose partitioning references that column (the
+    * "did we re-shuffle on the bucket key" probe). */
+  def countShuffles(df: DataFrame, onKey: Option[String] = None): Int =
+    planNodes(df).count {
+      case s: ShuffleExchangeExec => onKey.forall { k =>
+        s.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.exists(_.references.exists(_.name == k))
+          case _ => false
         }
       }
-      case _ => 0
-    }) + p.children.map(hits).sum + p.subqueries.map(hits).sum + (p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        hits(a.executedPlan)
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => hits(s.plan)
-      case _ => 0
-    })
-    hits(df.queryExecution.executedPlan)
-  }
+      case _ => false
+    }
 }
 
 object SparkSpec {
+  /** Four slots, under the production planning conf ([[graft.core.Graft.session]]),
+    * with only a per-JVM temp warehouse of its own. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // same optimizer extensions as Graft.session — PlanSpec pins depend
-      // on IntDivPushdown deriving the raw-column watermark bound
-      .withExtensions(new graft.plans.GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_set/collect_list/map-agg run as ObjectHashAggregate; the
-      // default sort-based fallback kicks in at 128 in-memory groups,
-      // turning every wide-key collect into a per-task sort of the whole
-      // input. Lift it to 128k groups (bounded: buffers are the collected
-      // sets themselves, which these queries bound by construction).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      // mirrors Graft.session: bucket-subset co-partitioned merge joins
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match the engine sessions: no AQE partition coalescing (see Graft.session)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    val s = graft.core.Graft.session(4, Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -84,6 +84,18 @@ class TokenPackingSpec extends SparkSpec {
       .count() == 2, "null-orderCol row dropped by the bucket join")
   }
 
+  test("an all-null order column gives null chunk ids, not an arbitrary packing") {
+    // no order to pack by: the within-bucket window order would be
+    // nondeterministic, so every chunk id is null (never a guessed packing)
+    val rows = Seq[(java.lang.Long, String, java.lang.Long)](
+      (null, "en", 7L), (null, "en", 5L), (null, "en", 9L), (null, "de", 3L))
+      .toDF("doc_id", "lang", "n_tokens")
+    val got = TokenPacking.packChunks(rows, "lang", "doc_id", "n_tokens", 10L)
+    assert(got.count() == 4, "an all-null-order row was dropped")
+    val ids = got.select("chunk_id").collect().map(r => Option(r.get(0))).toSeq
+    assert(ids.forall(_.isEmpty), s"chunk ids from an arbitrary order: $ids")
+  }
+
   test("empty input yields the shape, not a crash") {
     val empty = Seq.empty[(Long, String, Long)].toDF("doc_id", "lang", "n_tokens")
     val out = TokenPacking.packChunks(empty, "lang", "doc_id", "n_tokens", 10)
