@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.{Lakehouse, ManifestSnapshots}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -9,17 +9,31 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * + monotonic watermark + dedup-on-insert anti-joins + incremental state
   * merge — SURVEY.md §2.9) expressed as Structured Streaming.
   *
-  * Three pieces, each the Spark-native form of a reference idiom:
-  *  - [[dedupedWindowedAgg]]: watermark + dropDuplicatesWithinWatermark =
-  *    the INSERT..WHERE NOT EXISTS dedup guard (S6/J3) with BOUNDED state —
-  *    late duplicates beyond the watermark age out instead of growing state
-  *    forever (the property that matters at 100 TB/day).
-  *  - [[runningBalance]]: mapGroupsWithState = the incremental features
-  *    MERGE (A7): per-key state carried across micro-batches, exactly the
-  *    old+new accumulate the reference does with Iceberg MERGE INTO.
-  *  - [[foreachBatchUpsert]]: sink side — each micro-batch MERGEs into the
-  *    lake table via [[Lakehouse.mergeUpsert]], so batch and streaming share
-  *    one upsert implementation.
+  * Most entry points are one of three shapes, each built ONCE below:
+  *  - keyed twins ([[ewma]], [[drawdown]], [[cusum]], [[rollingMedian]],
+  *    [[bollinger]], [[rsi]], [[lastTouch]]) go through `keyedFold`:
+  *    per-user state carried across micro-batches — the incremental
+  *    features MERGE (A7) — with each twin supplying only its per-event
+  *    step over integer cents (`cents`, the batch twins'
+  *    floor(value * 100 + 0.5));
+  *  - closed-window histograms ([[driftTvd]], [[driftPsi]]) go through
+  *    `windowHistogram`: one 10-bucket histogram per open event-time
+  *    window, scored once when the watermark closes it;
+  *  - sinks (the `foreachBatch*` family, [[documentAdmission]],
+  *    [[servingStoreIngestion]]) go through `sink`: each micro-batch runs
+  *    the lake primitive the batch path runs ([[Lakehouse.mergeUpsert]],
+  *    [[Lakehouse.antiJoinAppend]], the view/store refreshes), so batch
+  *    and streaming share one implementation.
+  * The rest are single operators: watermarked dedup
+  * ([[dedupedWindowedAgg]]), sessionization, the funnel, stream-stream
+  * joins, staleness alerts and the KMV/HLL/CMS sketches.
+  *
+  * Ordering contract of the keyed twins: micro-batch iterators are
+  * unsorted, so each user's events are sorted by (ts, event_id) — NULL ts
+  * first, as the batch twins' `ORDER BY ts, event_id` sorts them — before
+  * the fold. Stream ≡ batch parity holds for in-order feeds: an event that
+  * arrives in a later micro-batch than a newer event of its user is folded
+  * after it.
   */
 object Streams {
 
@@ -217,6 +231,18 @@ object Streams {
         graft.pipeline.RawIngestion.datePartition(col("block_timestamp")))
   }
 
+  /** The sinks' one stream writer: every micro-batch, with its batch id, goes
+    * to `f` under `checkpoint`. Emptiness guards stay in each `f` — the
+    * view-maintenance sinks deliberately refresh outside theirs. */
+  private def sink(stream: DataFrame, checkpoint: String,
+      mode: OutputMode = OutputMode.Append())(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(f)
+      .start()
+
   /** Sink for the raw layer: anti-join-guarded APPEND of each micro-batch
     * — streaming and batch share [[Lakehouse.antiJoinAppend]] (S6), so a
     * re-delivered row (source replay, checkpoint recovery) lands exactly
@@ -227,14 +253,10 @@ object Streams {
       keys: Seq[String],
       partitionCols: Seq[String],
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          Lakehouse.antiJoinAppend(batch.sparkSession, batch, path, keys, partitionCols)
-      }
-      .start()
+    sink(stream, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        Lakehouse.antiJoinAppend(batch.sparkSession, batch, path, keys, partitionCols)
+    }
 
   /** [[foreachBatchRawAppend]] behind the persistent key-set Bloom guard
     * ([[Lakehouse.antiJoinAppendBloomGuarded]]): the replay guard stops
@@ -251,15 +273,11 @@ object Streams {
       keys: Seq[String],
       partitionCols: Seq[String],
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          Lakehouse.antiJoinAppendBloomGuarded(
-            batch.sparkSession, batch, path, keys, partitionCols)
-      }
-      .start()
+    sink(stream, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        Lakehouse.antiJoinAppendBloomGuarded(
+          batch.sparkSession, batch, path, keys, partitionCols)
+    }
 
   /** Streaming corpus admission — the training-data pipeline's ingest
     * gate as a stream: each micro-batch of documents dedups against the
@@ -278,82 +296,47 @@ object Streams {
       root: String,
       corpusPath: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        if (!batch0.isEmpty) {
-          val spark = batch0.sparkSession
-          // intra-batch duplicate guard: the same doc delivered twice in
-          // one micro-batch would multiply through the kept join (2x2
-          // rows) and land duplicate signature rows — the exact
-          // inflation hazard the admission exists to prevent (the
-          // text-index sink guards identically). NULL doc_ids drop up
-          // front: a doc without identity cannot be admitted, deduped,
-          // or replay-guarded, and letting one through would NPE the
-          // min() watermark below and kill the query on one malformed
-          // upstream batch (the HLL twin's null-hash skip is the same
-          // discipline).
-          val batch = batch0.filter(col("doc_id").isNotNull)
-            .dropDuplicates("doc_id").persist()
-          try if (!batch.isEmpty) {
-            import graft.pipeline.DedupStore
-            // bootstrap an empty index on the very first batch
-            DedupStore.ensureBuilt(spark, root, batch.filter(lit(false)))
-            val cut = batch.agg(min("doc_id")).head.getLong(0)
-            val verdicts = DedupStore.admit(spark, root, batch, cut)
-            try {
-              val admitted = verdicts.filter(col("admitted")).select("doc_id")
-              val kept = batch.join(admitted, "doc_id")
-              // replay safety (checkpoint recovery re-delivers a batch): the
-              // corpus append anti-joins on doc_id, and only ids not already
-              // in the index re-sign — a replayed batch is a no-op. A
-              // duplicated signature row would silently INFLATE later
-              // admission counts (the verify join multiplies per shingle
-              // row), so index idempotence is correctness, not hygiene.
-              Lakehouse.antiJoinAppend(spark, kept, corpusPath, Seq("doc_id"), Nil)
-              val alreadyIndexed = spark.table(DedupStore.shinglesTable(root))
-                .select("doc_id")
-              DedupStore.appendAdmitted(spark, root,
-                kept.join(alreadyIndexed, Seq("doc_id"), "left_anti"))
-            // release admit's per-batch verdict cache — a forever-running
-            // stream must not grow storage memory by one cache per batch
-            } finally verdicts.unpersist()
-          } finally batch.unpersist()
-        }
-      }
-      .start()
-
-  /** Streaming inverted-index ingestion — the live twin of
-    * [[graft.pipeline.TextIndexStore.appendDocuments]]: each micro-batch of
-    * documents is tokenized and bucket-appended to the persisted postings
-    * table, and the collection stats fold forward, so BM25 probes against
-    * the store see the stream's documents with no rebuild. Per-batch cost
-    * is O(batch tokens); replay (checkpoint recovery) is a no-op through
-    * the store's doc_id anti-join (and intra-batch duplicate deliveries
-    * collapse in the store's dropDuplicates), so postings can never
-    * double-count a re-delivered document's term frequencies. The
-    * postings/stats pair is two filesystem actions: a crash between them
-    * leaves stats stale, which the store detects via its postings-dir
-    * snapshot and repairs on the next read (TextIndexStore.currentStats) —
-    * so the folded stats converge to exactly-once too. */
-  def textIndexIngestion(
-      docs: DataFrame,
-      root: String,
-      checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        if (!batch0.isEmpty) {
-          val spark = batch0.sparkSession
-          import graft.pipeline.TextIndexStore
+    sink(docs, checkpoint) { (batch0, _) =>
+      if (!batch0.isEmpty) {
+        val spark = batch0.sparkSession
+        // intra-batch duplicate guard: the same doc delivered twice in
+        // one micro-batch would multiply through the kept join (2x2
+        // rows) and land duplicate signature rows — the exact
+        // inflation hazard the admission exists to prevent (the serving
+        // stores' admission guards identically). NULL doc_ids drop up
+        // front: a doc without identity cannot be admitted, deduped,
+        // or replay-guarded, and letting one through would NPE the
+        // min() watermark below and kill the query on one malformed
+        // upstream batch (the HLL twin's null-hash skip is the same
+        // discipline).
+        val batch = batch0.filter(col("doc_id").isNotNull)
+          .dropDuplicates("doc_id").persist()
+        try if (!batch.isEmpty) {
+          import graft.pipeline.DedupStore
           // bootstrap an empty index on the very first batch
-          TextIndexStore.ensureBuilt(spark, root, batch0.filter(lit(false)))
-          TextIndexStore.appendDocuments(spark, root, batch0)
-        }
+          DedupStore.ensureBuilt(spark, root, batch.filter(lit(false)))
+          val cut = batch.agg(min("doc_id")).head.getLong(0)
+          val verdicts = DedupStore.admit(spark, root, batch, cut)
+          try {
+            val admitted = verdicts.filter(col("admitted")).select("doc_id")
+            val kept = batch.join(admitted, "doc_id")
+            // replay safety (checkpoint recovery re-delivers a batch): the
+            // corpus append anti-joins on doc_id, and only ids not already
+            // in the index re-sign — a replayed batch is a no-op. A
+            // duplicated signature row would silently INFLATE later
+            // admission counts (the verify join multiplies per shingle
+            // row), so index idempotence is correctness, not hygiene.
+            Lakehouse.antiJoinAppend(spark, kept, corpusPath, Seq("doc_id"), Nil)
+            val alreadyIndexed = spark.table(DedupStore.shinglesTable(root))
+              .select("doc_id")
+            DedupStore.appendAdmitted(spark, root,
+              kept.join(alreadyIndexed, Seq("doc_id"), "left_anti"))
+          // release admit's per-batch verdict cache — a forever-running
+          // stream must not grow storage memory by one cache per batch
+          } finally verdicts.unpersist()
+        } finally batch.unpersist()
       }
-      .start()
+    }
 
   /** Streaming ingestion into ANY serving store through the unified
     * lifecycle ([[graft.pipeline.ServingStore.ingestBatch]]): bootstrap on
@@ -367,10 +350,12 @@ object Streams {
     * drift) retrains itself mid-stream instead of waiting for an operator.
     *
     * This is the generic form of [[documentAdmission]] (which adds corpus
-    * admission POLICY on top of the dedup store) and [[textIndexIngestion]]
-    * (now expressible as `servingStoreIngestion(TextIndexStore, ...)`);
-    * for the ANN store it is the streaming twin of
-    * [[graft.pipeline.VectorPipeline.ingest]] at the default drift
+    * admission POLICY on top of the dedup store). For the text-index store
+    * it is the live twin of [[graft.pipeline.TextIndexStore.appendDocuments]]:
+    * a replayed document never double-counts its term frequencies, and
+    * stats left stale by a crash between the postings and stats writes
+    * are repaired on the next read. For the ANN store it is the streaming
+    * twin of [[graft.pipeline.VectorPipeline.ingest]] at the default drift
     * thresholds — a vector stream keeps a probe-ready IVF index current,
     * retrains included, with no batch scheduler in the loop. */
   def servingStoreIngestion(
@@ -378,16 +363,9 @@ object Streams {
       batches: DataFrame,
       root: String,
       checkpoint: String): StreamingQuery =
-    batches.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          store.ingestBatch(batch.sparkSession, root, batch)
-          ()
-        }
-      }
-      .start()
+    sink(batches, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty) store.ingestBatch(batch.sparkSession, root, batch): Unit
+    }
 
   /** Funnel state / output for [[funnelProgress]]. Times are epoch millis;
     * -1 encodes "not reached" (Option[Long] in state costs an extra object
@@ -577,6 +555,16 @@ object Streams {
     md.digest(s"$salt:$w".getBytes("UTF-8"))(0) & 0xff
   }
 
+  /** Count one `w` into the d=2 x w=256 grid — both CMS variants. */
+  private def cmsBump(cells: Array[Long], w: String): Unit = {
+    cells(cmsBucket(1, w)) += 1
+    cells(256 + cmsBucket(2, w)) += 1
+  }
+
+  /** The Count-Min estimate of `w`: the min over its two cells. */
+  private def cmsEstimate(cells: Array[Long], w: String): Long =
+    math.min(cells(cmsBucket(1, w)), cells(256 + cmsBucket(2, w)))
+
   /** Count-Min state / output for [[cmsFrequency]]. Public: the state
     * encoder's generated code needs constructor access. Cells are LONG:
     * the batch twin counts in BIGINT, and a hot cell in a forever-
@@ -622,15 +610,11 @@ object Streams {
           val cells = state.getOption.map(_.cells.clone()).getOrElse(new Array[Long](512))
           val seen = scala.collection.mutable.LinkedHashSet.empty[String]
           rows.foreach { case (_, w) =>
-            cells(cmsBucket(1, w)) += 1
-            cells(256 + cmsBucket(2, w)) += 1
+            cmsBump(cells, w)
             seen += w
           }
           state.update(CmsState(cells))
-          seen.iterator.map { w =>
-            val est = math.min(cells(cmsBucket(1, w)), cells(256 + cmsBucket(2, w)))
-            CmsOut(key, w, est)
-          }
+          seen.iterator.map(w => CmsOut(key, w, cmsEstimate(cells, w)))
         })
   }
 
@@ -704,18 +688,14 @@ object Streams {
                     "it was already counted; counting it could double, " +
                     "skipping it could drop. Re-key or reset the sketch " +
                     "to replay from that far back.")
-              cells(cmsBucket(1, w)) += 1
-              cells(256 + cmsBucket(2, w)) += 1
+              cmsBump(cells, w)
               fresh += b
             }
             emit += w
           }
           val mergedLedger = (st.seenBatches ++ fresh).distinct.sorted.takeRight(LedgerCap)
           state.update(CmsLedgerState(cells, mergedLedger))
-          emit.iterator.map { w =>
-            val est = math.min(cells(cmsBucket(1, w)), cells(256 + cmsBucket(2, w)))
-            CmsOut(key, w, est)
-          }
+          emit.iterator.map(w => CmsOut(key, w, cmsEstimate(cells, w)))
         })
   }
 
@@ -754,23 +734,19 @@ object Streams {
       spec: graft.pipeline.MaterializedView.MvSpec,
       keys: Seq[String],
       checkpoint: String): StreamingQuery =
-    deltas.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        if (!batch.isEmpty)
-          ManifestSnapshots.appendDeltaGuarded(s, baseDir, batch, keys): Unit
-        // the refresh deliberately runs OUTSIDE the emptiness guard (an
-        // empty or fully-replayed batch catches up a crash between a
-        // previous append and its refresh) — but only once the base
-        // chain EXISTS: an empty micro-batch before the first committed
-        // version must idle, not kill the query on refresh's
-        // missing-snapshot refusal
-        if (ManifestSnapshots.latestVersion(s, baseDir).nonEmpty)
-          graft.pipeline.MaterializedView.refresh(s, baseDir, viewDir, spec): Unit
-      }
-      .start()
+    sink(deltas, checkpoint) { (batch, _) =>
+      val s = batch.sparkSession
+      if (!batch.isEmpty)
+        ManifestSnapshots.appendDeltaGuarded(s, baseDir, batch, keys): Unit
+      // the refresh deliberately runs OUTSIDE the emptiness guard (an
+      // empty or fully-replayed batch catches up a crash between a
+      // previous append and its refresh) — but only once the base
+      // chain EXISTS: an empty micro-batch before the first committed
+      // version must idle, not kill the query on refresh's
+      // missing-snapshot refusal
+      if (ManifestSnapshots.latestVersion(s, baseDir).nonEmpty)
+        graft.pipeline.MaterializedView.refresh(s, baseDir, viewDir, spec): Unit
+    }
 
   /** Streaming JOIN-view maintenance — [[foreachBatchViewMaintenance]]'s
     * two-table sibling: each micro-batch of FACT rows lands in the A
@@ -791,19 +767,15 @@ object Streams {
       jm: graft.pipeline.JoinMaterializedView.JoinMvSpec,
       keys: Seq[String],
       checkpoint: String): StreamingQuery =
-    factDeltas.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        if (!batch.isEmpty)
-          ManifestSnapshots.appendDeltaGuarded(s, aDir, batch, keys): Unit
-        if (ManifestSnapshots.latestVersion(s, aDir).nonEmpty
-            && ManifestSnapshots.latestVersion(s, bDir).nonEmpty)
-          graft.pipeline.JoinMaterializedView.refresh(
-            s, aDir, bDir, viewDir, jm): Unit
-      }
-      .start()
+    sink(factDeltas, checkpoint) { (batch, _) =>
+      val s = batch.sparkSession
+      if (!batch.isEmpty)
+        ManifestSnapshots.appendDeltaGuarded(s, aDir, batch, keys): Unit
+      if (ManifestSnapshots.latestVersion(s, aDir).nonEmpty
+          && ManifestSnapshots.latestVersion(s, bDir).nonEmpty)
+        graft.pipeline.JoinMaterializedView.refresh(
+          s, aDir, bDir, viewDir, jm): Unit
+    }
 
   /** Streaming basket-view maintenance — the
     * [[graft.pipeline.BasketStore]] admission loop as a stream sink:
@@ -830,21 +802,17 @@ object Streams {
       root: String,
       checkpoint: String,
       strictWholeOrders: Boolean = false): StreamingQuery =
-    orderLines.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // strict rides INSIDE admitBatch: the skip census happens before
-        // any rollup merge there, so a violation PREVENTS the corrupt
-        // commit instead of detecting it after the fold — and it fires
-        // on a remainder-only batch (skipped > 0, fresh == 0) too, which
-        // a post-hoc mixed-batch check silently melted to mode=empty.
-        if (!batch.isEmpty)
-          graft.pipeline.BasketStore.admitBatch(
-            batch.sparkSession, root, batch,
-            strict = strictWholeOrders): Unit
-      }
-      .start()
+    sink(orderLines, checkpoint) { (batch, _) =>
+      // strict rides INSIDE admitBatch: the skip census happens before
+      // any rollup merge there, so a violation PREVENTS the corrupt
+      // commit instead of detecting it after the fold — and it fires
+      // on a remainder-only batch (skipped > 0, fresh == 0) too, which
+      // a post-hoc mixed-batch check silently melted to mode=empty.
+      if (!batch.isEmpty)
+        graft.pipeline.BasketStore.admitBatch(
+          batch.sparkSession, root, batch,
+          strict = strictWholeOrders): Unit
+    }
 
   /** Streaming medallion on the CDC substrate: each micro-batch of STAGE
     * rows lands in the analytics chain behind the row-identity replay
@@ -863,50 +831,27 @@ object Streams {
       stage: DataFrame,
       root: String,
       checkpoint: String): StreamingQuery =
-    stage.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.pipeline.MedallionCdc.runCycle(batch.sparkSession, root, batch): Unit
-      }
-      .start()
+    sink(stage, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.pipeline.MedallionCdc.runCycle(batch.sparkSession, root, batch): Unit
+    }
 
-  /** Per-window drift state / output for [[driftTvd]]. Public: the state
-    * encoder's generated code needs constructor access. */
+  /** Per-window histogram state of [[driftTvd]] and [[driftPsi]]. Public:
+    * the state encoder's generated code needs constructor access. */
   case class DriftCounts(counts: Seq[Long])
   case class DriftOut(window_start: java.sql.Timestamp, n_cur: Long, tvd: Double)
 
-  /** Streaming distribution-drift monitor — the streaming twin of batch
-    * `dq_drift_tvd`: each tumbling event-time window's 10-bucket value
-    * histogram is scored against a FROZEN reference histogram by
-    * total-variation distance, and the (window, tvd) row emits ONCE when
-    * the watermark proves the window complete — the live gate a feature
-    * pipeline puts in front of model refresh, alerting within one
-    * watermark delay of the drifted window closing instead of at the next
-    * batch audit.
-    *
-    * Same parity discipline as the batch query: TVD (never PSI/KL — libm
-    * ln isn't pinned across engines), computed as integer cross products
-    * |r_b·t_cur − c_b·t_ref| over a common denominator with ONE double
-    * division at the end, so the stream's row for a window equals the
-    * batch recompute bit-for-bit (StreamingSpec proves it). Buckets mirror
-    * the batch bucketing exactly: min(floor(value/20), 9), clamped at 0
-    * for the stream's benefit on adversarial negatives.
-    *
-    * State is 10 longs + a timeout per OPEN window — bounded by the
-    * watermark horizon over the window length, never by data volume: the
-    * 100 TB/day shape where a windowed COUNT per bucket via two chained
-    * aggregations would need multi-operator watermark plumbing for the
-    * same bounded state, with the emit-once close handled here by the
-    * event-time timeout. Closed windows leave the store immediately. */
-  def driftTvd(events: Dataset[Ev], ref: Seq[Long],
-      windowMs: Long = 604800000L,
-      watermarkAge: String = "1 hour"): Dataset[DriftOut] = {
+  /** The drift monitors' one state machine. Per tumbling event-time window
+    * (the group key), a 10-bucket value histogram accumulates across
+    * micro-batches; buckets mirror the batch bucketing exactly,
+    * min(floor(value/20), 9), clamped at 0 for adversarial negatives. When
+    * the watermark passes the window's end the event-time timeout fires,
+    * the window leaves the store and `close(windowStart, counts)` emits
+    * its one row. State is 10 longs + a timeout per OPEN window. */
+  private def windowHistogram[O: Encoder](events: Dataset[Ev], windowMs: Long,
+      watermarkAge: String)(
+      close: (java.sql.Timestamp, Seq[Long]) => O): Dataset[O] = {
     import events.sparkSession.implicits._
-    require(ref.size == 10, "driftTvd needs the 10-bucket reference histogram")
-    val tRef = ref.sum
-    require(tRef > 0, "driftTvd needs a non-empty reference histogram")
     events
       .withWatermark("ts", watermarkAge)
       .groupByKey(e => Math.floorDiv(e.ts.getTime, windowMs))
@@ -915,14 +860,7 @@ object Streams {
           if (state.hasTimedOut) {
             val counts = state.get.counts
             state.remove()
-            val tCur = counts.sum
-            val num = ref.zip(counts)
-              .map { case (r, c) => math.abs(r * tCur - c * tRef) }.sum
-            val tvd =
-              if (tCur == 0) 0.0
-              else num.toDouble / (2.0 * tRef.toDouble * tCur.toDouble)
-            Iterator.single(DriftOut(
-              new java.sql.Timestamp(win * windowMs), tCur, tvd))
+            Iterator.single(close(new java.sql.Timestamp(win * windowMs), counts))
           } else {
             val cur = state.getOption.map(_.counts.toArray)
               .getOrElse(Array.fill(10)(0L))
@@ -940,6 +878,46 @@ object Streams {
             Iterator.empty
           }
         })
+  }
+
+  /** Streaming distribution-drift monitor — the streaming twin of batch
+    * `dq_drift_tvd`: each tumbling event-time window's 10-bucket value
+    * histogram is scored against a FROZEN reference histogram by
+    * total-variation distance, and the (window, tvd) row emits ONCE when
+    * the watermark proves the window complete — the live gate a feature
+    * pipeline puts in front of model refresh, alerting within one
+    * watermark delay of the drifted window closing instead of at the next
+    * batch audit.
+    *
+    * Same parity discipline as the batch query: TVD (never PSI/KL — libm
+    * ln isn't pinned across engines), computed as integer cross products
+    * |r_b·t_cur − c_b·t_ref| over a common denominator with ONE double
+    * division at the end, so the stream's row for a window equals the
+    * batch recompute bit-for-bit (StreamingSpec proves it). Buckets, state
+    * and close are `windowHistogram`'s.
+    *
+    * State is bounded by the watermark horizon over the window length,
+    * never by data volume: the
+    * 100 TB/day shape where a windowed COUNT per bucket via two chained
+    * aggregations would need multi-operator watermark plumbing for the
+    * same bounded state, with the emit-once close handled here by the
+    * event-time timeout. Closed windows leave the store immediately. */
+  def driftTvd(events: Dataset[Ev], ref: Seq[Long],
+      windowMs: Long = 604800000L,
+      watermarkAge: String = "1 hour"): Dataset[DriftOut] = {
+    import events.sparkSession.implicits._
+    require(ref.size == 10, "driftTvd needs the 10-bucket reference histogram")
+    val tRef = ref.sum
+    require(tRef > 0, "driftTvd needs a non-empty reference histogram")
+    windowHistogram(events, windowMs, watermarkAge) { (start, counts) =>
+      val tCur = counts.sum
+      val num = ref.zip(counts)
+        .map { case (r, c) => math.abs(r * tCur - c * tRef) }.sum
+      val tvd =
+        if (tCur == 0) 0.0
+        else num.toDouble / (2.0 * tRef.toDouble * tCur.toDouble)
+      DriftOut(start, tCur, tvd)
+    }
   }
 
   /** Stale-entity state / output for [[staleEntities]]. Public: the state
@@ -989,6 +967,35 @@ object Streams {
         })
   }
 
+  /** The keyed twins' one loop (ordering contract in the header): per
+    * user, sort the micro-batch by (ts, event_id) with NULL ts first, fold
+    * `step(uid, state, event)` over it from the stored state, emit the
+    * step's rows, and write the state back iff the fold left one — so a
+    * twin whose step keeps `None` (lastTouch before its first touch) stores
+    * nothing. */
+  private def keyedFold[S: Encoder, O: Encoder](events: Dataset[Ev])(
+      step: (Long, Option[S], Ev) => (Option[S], Option[O])): Dataset[O] = {
+    import events.sparkSession.implicits._
+    events
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (uid: Long, evs: Iterator[Ev], state: GroupState[S]) => {
+          var st = state.getOption
+          val out = Seq.newBuilder[O]
+          evs.toSeq.sortBy(e => (Option(e.ts).map(_.getTime), e.event_id)).foreach { e =>
+            val (next, row) = step(uid, st, e)
+            st = next
+            out ++= row
+          }
+          st.foreach(state.update)
+          out.result().iterator
+        })
+  }
+
+  /** An event's value in integer cents — the batch twins' rounding
+    * expression, floor(value * 100 + 0.5). */
+  private def cents(e: Ev): Long = math.floor(e.value * 100 + 0.5).toLong
+
   /** Bounded EWMA state: the user's last ≤7 cents, most recent FIRST. */
   case class EwmaState(recent: Seq[Long])
   case class EwmaOut(user_id: Long, event_id: Long, cents: Long,
@@ -999,37 +1006,25 @@ object Streams {
     * first), a CONSTANT-size state record regardless of history length
     * (this bounded-tail truncation is precisely why the batch operator
     * was specified with 8 taps: the same recurrence then streams with
-    * O(1) state instead of an unbounded geometric tail). Each micro-batch
-    * sorts by (ts, event_id) before folding (iterators are unsorted); the
-    * batch ≡ stream parity contract assumes in-order batch feeds, the
-    * runningBalance contract. Arithmetic parity is exact: integer cents,
-    * integer power-of-two weights, one final IEEE division — identical to
-    * the batch window form bit for bit. */
+    * O(1) state instead of an unbounded geometric tail). Arithmetic
+    * parity is exact: integer cents, integer power-of-two weights, one
+    * final IEEE division — identical to the batch window form bit for
+    * bit. */
   def ewma(events: Dataset[Ev]): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Ev], state: GroupState[EwmaState]) => {
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var recent = state.getOption.map(_.recent).getOrElse(Seq.empty[Long])
-          val out = Seq.newBuilder[EwmaOut]
-          sorted.foreach { e =>
-            // same rounding expression as the batch side: floor(v*100+0.5)
-            val cents = math.floor(e.value * 100 + 0.5).toLong
-            var num = cents * 128L
-            var den = 128L
-            recent.iterator.zipWithIndex.foreach { case (x, i) =>
-              val w = 1L << (6 - i) // lag k = i+1 carries weight 2^(7-k)
-              num += x * w
-              den += w
-            }
-            out += EwmaOut(uid, e.event_id, cents, num, den, num.toDouble / den)
-            recent = (cents +: recent).take(7)
-          }
-          state.update(EwmaState(recent))
-          out.result().iterator
-        })
+    keyedFold[EwmaState, EwmaOut](events) { (uid, st, e) =>
+      val recent = st.fold(Seq.empty[Long])(_.recent)
+      val c = cents(e)
+      var num = c * 128L
+      var den = 128L
+      recent.iterator.zipWithIndex.foreach { case (x, i) =>
+        val w = 1L << (6 - i) // lag k = i+1 carries weight 2^(7-k)
+        num += x * w
+        den += w
+      }
+      (Some(EwmaState((c +: recent).take(7))),
+        Some(EwmaOut(uid, e.event_id, c, num, den, num.toDouble / den)))
+    }
   }
 
   /** Drawdown state: the user's running peak — ONE long per key, the
@@ -1045,27 +1040,14 @@ object Streams {
     * at any stream length; the batch query's final per-user pick
     * (max dd, tie on event_id) is a plain rollup over these outputs, so
     * stream ≡ batch on the running columns implies it for the pick too
-    * (StreamingSpec pins both). Same ordering contract as the other
-    * keyed twins: each micro-batch sorts by (ts, event_id); parity
-    * assumes in-order batch feeds. */
+    * (StreamingSpec pins both). */
   def drawdown(events: Dataset[Ev]): Dataset[DdOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Ev], state: GroupState[DdState]) => {
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var peak = state.getOption.map(_.peak).getOrElse(Long.MinValue)
-          val out = Seq.newBuilder[DdOut]
-          sorted.foreach { e =>
-            // same rounding expression as the batch side: floor(v*100+0.5)
-            val cents = math.floor(e.value * 100 + 0.5).toLong
-            peak = math.max(peak, cents)
-            out += DdOut(uid, e.event_id, cents, peak, peak - cents)
-          }
-          state.update(DdState(peak))
-          out.result().iterator
-        })
+    keyedFold[DdState, DdOut](events) { (uid, st, e) =>
+      val c = cents(e)
+      val peak = math.max(st.fold(Long.MinValue)(_.peak), c)
+      (Some(DdState(peak)), Some(DdOut(uid, e.event_id, c, peak, peak - c)))
+    }
   }
 
   /** CUSUM state: the user's prefix sum and its running minimum — two
@@ -1086,28 +1068,18 @@ object Streams {
   def cusum(events: Dataset[Ev], refCents: Long,
       alarmAt: Long): Dataset[CusumOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Ev], state: GroupState[CusumState]) => {
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          // the running min ranges over OBSERVED prefixes only (so the
-          // first event's statistic is 0) — exactly the batch window's
-          // MIN(ps) OVER (unbounded preceding..current row), which is
-          // what the twin must reproduce bit-for-bit
-          var st = state.getOption.getOrElse(CusumState(0L, Long.MaxValue))
-          val out = Seq.newBuilder[CusumOut]
-          sorted.foreach { e =>
-            val cents = math.floor(e.value * 100 + 0.5).toLong
-            val ps = st.ps + (cents - refCents)
-            val minPs = math.min(st.minPs, ps)
-            out += CusumOut(uid, e.event_id, cents, ps - minPs,
-              ps - minPs > alarmAt)
-            st = CusumState(ps, minPs)
-          }
-          state.update(st)
-          out.result().iterator
-        })
+    keyedFold[CusumState, CusumOut](events) { (uid, st, e) =>
+      // the running min ranges over OBSERVED prefixes only (so the
+      // first event's statistic is 0) — exactly the batch window's
+      // MIN(ps) OVER (unbounded preceding..current row), which is
+      // what the twin must reproduce bit-for-bit
+      val prev = st.getOrElse(CusumState(0L, Long.MaxValue))
+      val c = cents(e)
+      val ps = prev.ps + (c - refCents)
+      val minPs = math.min(prev.minPs, ps)
+      (Some(CusumState(ps, minPs)),
+        Some(CusumOut(uid, e.event_id, c, ps - minPs, ps - minPs > alarmAt)))
+    }
   }
 
   /** Bounded rolling-median state: the user's last ≤4 cents, most recent
@@ -1120,28 +1092,17 @@ object Streams {
     * smoother as keyed state — exactly the last 4 cents per user, so the
     * state record is constant-size like [[ewma]]'s, and the median of
     * the ≤5-value window is pure integer selection (sorted, lower-middle
-    * element), bit-identical to the batch window form. Same ordering
-    * contract as the other keyed twins: each micro-batch sorts by
-    * (ts, event_id); parity assumes in-order batch feeds. */
+    * element), bit-identical to the batch window form. */
   def rollingMedian(events: Dataset[Ev]): Dataset[MedOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Ev], state: GroupState[MedState]) => {
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var recent = state.getOption.map(_.recent).getOrElse(Seq.empty[Long])
-          val out = Seq.newBuilder[MedOut]
-          sorted.foreach { e =>
-            val cents = math.floor(e.value * 100 + 0.5).toLong
-            val win = (cents +: recent).sorted
-            val med = win((win.size + 1) / 2 - 1) // 1-based (n+1)/2, the lower median
-            out += MedOut(uid, e.event_id, cents, med, win.size)
-            recent = (cents +: recent).take(4)
-          }
-          state.update(MedState(recent))
-          out.result().iterator
-        })
+    keyedFold[MedState, MedOut](events) { (uid, st, e) =>
+      val c = cents(e)
+      val recent = c +: st.fold(Seq.empty[Long])(_.recent)
+      val win = recent.sorted
+      val med = win((win.size + 1) / 2 - 1) // 1-based (n+1)/2, the lower median
+      (Some(MedState(recent.take(4))),
+        Some(MedOut(uid, e.event_id, c, med, win.size)))
+    }
   }
 
   /** Bollinger state: the user's last ≤19 cents, most recent first —
@@ -1156,39 +1117,27 @@ object Streams {
     * parity is the batch query's exactly: BIGINT window moments, the
     * |z|>2 decision a PURE INTEGER comparison ((n·x−s1)² vs 4·(n·Σx²−s1²),
     * BigInt-exact like the batch DECIMALs), and z itself the same two
-    * IEEE steps (None on a zero-variance window). Ordering contract as
-    * the other keyed twins: each micro-batch sorts by (ts, event_id);
-    * parity assumes in-order batch feeds. */
+    * IEEE steps (None on a zero-variance window). */
   def bollinger(events: Dataset[Ev]): Dataset[BollOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Ev], state: GroupState[BollState]) => {
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var recent = state.getOption.map(_.recent).getOrElse(Seq.empty[Long])
-          val out = Seq.newBuilder[BollOut]
-          sorted.foreach { e =>
-            val cents = math.floor(e.value * 100 + 0.5).toLong
-            val win = cents +: recent
-            val n = win.size.toLong
-            val s1 = win.sum
-            val s2 = win.iterator.map(c => BigInt(c) * c).sum
-            val dev = n * cents - s1
-            val v = s2 * n - BigInt(s1) * s1
-            val z =
-              if (v == 0) None
-              else Some(dev.toDouble / math.sqrt(v.doubleValue))
-            val breakout =
-              if (dev > 0 && BigInt(dev) * dev > 4 * v) 1
-              else if (dev < 0 && BigInt(dev) * dev > 4 * v) -1
-              else 0
-            out += BollOut(uid, e.event_id, cents, n, s1, z, breakout)
-            recent = win.take(19)
-          }
-          state.update(BollState(recent))
-          out.result().iterator
-        })
+    keyedFold[BollState, BollOut](events) { (uid, st, e) =>
+      val c = cents(e)
+      val win = c +: st.fold(Seq.empty[Long])(_.recent)
+      val n = win.size.toLong
+      val s1 = win.sum
+      val s2 = win.iterator.map(x => BigInt(x) * x).sum
+      val dev = n * c - s1
+      val v = s2 * n - BigInt(s1) * s1
+      val z =
+        if (v == 0) None
+        else Some(dev.toDouble / math.sqrt(v.doubleValue))
+      val breakout =
+        if (dev > 0 && BigInt(dev) * dev > 4 * v) 1
+        else if (dev < 0 && BigInt(dev) * dev > 4 * v) -1
+        else 0
+      (Some(BollState(win.take(19))),
+        Some(BollOut(uid, e.event_id, c, n, s1, z, breakout)))
+    }
   }
 
   /** RSI state: the user's last observed cents plus the last ≤13 value
@@ -1205,39 +1154,28 @@ object Streams {
     * `n_delta = 14` warmup gate, which here is simply "13 deltas stored
     * before this one"). Arithmetic parity is the batch query's: exact
     * integer cents, gain/loss sums as BIGINTs, ONE truncating division
-    * to ppm (None when the window never moved). Ordering contract as
-    * the other keyed twins: each micro-batch sorts by (ts, event_id);
-    * parity assumes in-order batch feeds. */
+    * to ppm (None when the window never moved). */
   def rsi(events: Dataset[Ev]): Dataset[RsiOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Ev], state: GroupState[RsiState]) => {
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var st = state.getOption
-          val out = Seq.newBuilder[RsiOut]
-          sorted.foreach { e =>
-            val cents = math.floor(e.value * 100 + 0.5).toLong
-            st match {
-              case None => st = Some(RsiState(cents, Seq.empty))
-              case Some(RsiState(prev, deltas)) =>
-                val d = cents - prev
-                if (deltas.size == 13) {
-                  val frame = d +: deltas
-                  val gains = frame.iterator.filter(_ > 0).sum
-                  val losses = -frame.iterator.filter(_ < 0).sum
-                  val rsi =
-                    if (gains + losses == 0) None
-                    else Some(gains * 1000000L / (gains + losses))
-                  out += RsiOut(uid, e.event_id, cents, gains, losses, rsi)
-                }
-                st = Some(RsiState(cents, (d +: deltas).take(13)))
+    keyedFold[RsiState, RsiOut](events) { (uid, st, e) =>
+      val c = cents(e)
+      st match {
+        case None => (Some(RsiState(c, Seq.empty)), None)
+        case Some(RsiState(prev, deltas)) =>
+          val frame = (c - prev) +: deltas
+          val row =
+            if (deltas.size < 13) None
+            else {
+              val gains = frame.iterator.filter(_ > 0).sum
+              val losses = -frame.iterator.filter(_ < 0).sum
+              val rsi =
+                if (gains + losses == 0) None
+                else Some(gains * 1000000L / (gains + losses))
+              Some(RsiOut(uid, e.event_id, c, gains, losses, rsi))
             }
-          }
-          st.foreach(state.update)
-          out.result().iterator
-        })
+          (Some(RsiState(c, frame.take(13))), row)
+      }
+    }
   }
 
   /** Last-touch state: the most recent non-purchase event type seen for
@@ -1249,29 +1187,17 @@ object Streams {
     * purchase emits the channel (last PRECEDING non-purchase type, or
     * 'organic') it is credited to, with exact cents — the per-event
     * view whose per-channel rollup equals the batch query (pinned by
-    * StreamingSpec). Ordering contract as the other keyed twins. */
+    * StreamingSpec). A user seen only purchasing stores no state. */
   def lastTouch(events: Dataset[Ev]): Dataset[TouchOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, evs: Iterator[Ev], state: GroupState[TouchState]) => {
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var touch = state.getOption.map(_.channel)
-          val out = Seq.newBuilder[TouchOut]
-          sorted.foreach { e =>
-            if (e.event_type == "purchase")
-              out += TouchOut(uid, e.event_id, touch.getOrElse("organic"),
-                math.floor(e.value * 100 + 0.5).toLong)
-            else touch = Some(e.event_type)
-          }
-          touch.foreach(t => state.update(TouchState(t)))
-          out.result().iterator
-        })
+    keyedFold[TouchState, TouchOut](events) { (uid, st, e) =>
+      if (e.event_type == "purchase")
+        (st, Some(TouchOut(uid, e.event_id, st.fold("organic")(_.channel), cents(e))))
+      else (Some(TouchState(e.event_type)), None)
+    }
   }
 
-  /** Per-window PSI state / output for [[driftPsi]]. */
-  case class PsiCounts(counts: Seq[Long])
+  /** Per-window output for [[driftPsi]]; its state is [[DriftCounts]]. */
   case class PsiOut(window_start: java.sql.Timestamp, n_cur: Long, psi: Double)
 
   /** Streaming Population-Stability-Index monitor — [[driftTvd]]'s
@@ -1286,8 +1212,8 @@ object Streams {
     * identical two-IEEE-division tail — so a window's streamed PSI
     * equals a batch recompute of the same rows bit for bit (equal to
     * dq_psi's own form whenever every bucket is observed, which the
-    * smoothing makes the common case). State and close semantics are
-    * driftTvd's: 10 longs + an event-time timeout per open window. */
+    * smoothing makes the common case). State and close are
+    * `windowHistogram`'s, shared with driftTvd. */
   def driftPsi(events: Dataset[Ev], ref: Seq[Long],
       windowMs: Long = 604800000L,
       watermarkAge: String = "1 hour"): Dataset[PsiOut] = {
@@ -1297,44 +1223,24 @@ object Streams {
     val tRef = refS.sum
     val lnTRef = graft.functions.PinnedLog.lnNanos(tRef, 1L)
     val lnRefS = refS.map(r => graft.functions.PinnedLog.lnNanos(r, 1L))
-    events
-      .withWatermark("ts", watermarkAge)
-      .groupByKey(e => Math.floorDiv(e.ts.getTime, windowMs))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (win: Long, evs: Iterator[Ev], state: GroupState[PsiCounts]) => {
-          if (state.hasTimedOut) {
-            val counts = state.get.counts
-            state.remove()
-            val nCurRaw = counts.sum
-            val curS = counts.map(_ + 1L)
-            val tCur = curS.sum
-            val lnTCur = graft.functions.PinnedLog.lnNanos(tCur, 1L)
-            // Σ (n_cur·t_ref − n_ref·t_cur)·(ln n_cur + ln t_ref − ln n_ref − ln t_cur),
-            // exact (BigInt ≡ the batch DECIMAL(38,0) sums)
-            val num = refS.indices.iterator.map { b =>
-              val nCur = curS(b); val nRef = refS(b)
-              val lnSum = graft.functions.PinnedLog.lnNanos(nCur, 1L) +
-                lnTRef - lnRefS(b) - lnTCur
-              (BigInt(nCur) * tRef - BigInt(nRef) * tCur) * lnSum
-            }.sum
-            // single rounding of the exact product — matches the batch
-            // CAST(t_ref*t_cur AS DOUBLE) tail past 2^53 (DataQuality.psi too)
-            val psi = num.doubleValue / (BigInt(tRef) * BigInt(tCur)).doubleValue / 1e9
-            Iterator.single(PsiOut(
-              new java.sql.Timestamp(win * windowMs), nCurRaw, psi))
-          } else {
-            val cur = state.getOption.map(_.counts.toArray)
-              .getOrElse(Array.fill(10)(0L))
-            evs.foreach { e =>
-              val b = math.min(math.floor(e.value / 20).toLong, 9L)
-              cur(math.max(b, 0L).toInt) += 1
-            }
-            state.update(PsiCounts(cur.toSeq))
-            state.setTimeoutTimestamp(math.max(win * windowMs + windowMs,
-              state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-        })
+    windowHistogram(events, windowMs, watermarkAge) { (start, counts) =>
+      val nCurRaw = counts.sum
+      val curS = counts.map(_ + 1L)
+      val tCur = curS.sum
+      val lnTCur = graft.functions.PinnedLog.lnNanos(tCur, 1L)
+      // Σ (n_cur·t_ref − n_ref·t_cur)·(ln n_cur + ln t_ref − ln n_ref − ln t_cur),
+      // exact (BigInt ≡ the batch DECIMAL(38,0) sums)
+      val num = refS.indices.iterator.map { b =>
+        val nCur = curS(b); val nRef = refS(b)
+        val lnSum = graft.functions.PinnedLog.lnNanos(nCur, 1L) +
+          lnTRef - lnRefS(b) - lnTCur
+        (BigInt(nCur) * tRef - BigInt(nRef) * tCur) * lnSum
+      }.sum
+      // single rounding of the exact product — matches the batch
+      // CAST(t_ref*t_cur AS DOUBLE) tail past 2^53 (DataQuality.psi too)
+      val psi = num.doubleValue / (BigInt(tRef) * BigInt(tCur)).doubleValue / 1e9
+      PsiOut(start, nCurRaw, psi)
+    }
   }
 
   /** Sink: write-audit-publish admission per micro-batch — the streaming
@@ -1367,13 +1273,9 @@ object Streams {
       path: String,
       checkpoint: String,
       audit: DataFrame => Boolean): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) wapAdmitBatch(batch.sparkSession, path, id, batch, audit)
-      }
-      .start()
+    sink(stream, checkpoint) { (batch, id) =>
+      if (!batch.isEmpty) wapAdmitBatch(batch.sparkSession, path, id, batch, audit)
+    }
 
   private def wapLedgerPath(path: String) =
     new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/wap_ledger")
@@ -1468,11 +1370,7 @@ object Streams {
       path: String,
       keys: Seq[String],
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) Lakehouse.mergeUpsert(batch.sparkSession, batch, path, keys)
-      }
-      .start()
+    sink(stream, checkpoint, OutputMode.Update()) { (batch, _) =>
+      if (!batch.isEmpty) Lakehouse.mergeUpsert(batch.sparkSession, batch, path, keys)
+    }
 }

@@ -1298,4 +1298,128 @@ class StreamingSpec extends SparkSpec {
     assert(ids == Seq(1L, 2L, 3L), s"conflict lost or duplicated rows: $ids")
     assert(ManifestSnapshots.branches(spark, root).isEmpty)
   }
+
+  test("ewma with a NULL-ts event in the first micro-batch ≡ batch w18_ewma") {
+    implicit val sqlCtx = spark.sqlContext
+    // user 7's NULL-ts event has the LARGEST event_id of its batch, so only
+    // a NULLS FIRST sort (the batch ORDER BY ts, event_id) folds it first
+    val evs = Seq(Ev(1, ts(1), 7, "t", 1.5), Ev(2, ts(2), 7, "t", 3.0),
+      Ev(3, null, 7, "t", 9.0), Ev(4, ts(1), 8, "t", 2.0),
+      Ev(5, ts(3), 7, "t", 4.5), Ev(6, ts(2), 8, "t", 6.0))
+    val mem = MemoryStream[Ev]
+    val q = Streams.ewma(mem.toDS())
+      .writeStream.format("memory").queryName("ewma_nullts").outputMode("append").start()
+    try {
+      mem.addData(evs.filter(_.event_id <= 4): _*)
+      q.processAllAvailable()
+      mem.addData(evs.filter(_.event_id > 4): _*)
+      q.processAllAvailable()
+      val streamed = spark.table("ewma_nullts")
+        .as[(Long, Long, Long, Long, Long, Double)].collect().toSet
+      val dir = java.nio.file.Files.createTempDirectory("sewma-null").toString
+      evs.toDF().withColumn("props", org.apache.spark.sql.functions.lit("{}"))
+        .write.parquet(s"$dir/events.parquet")
+      val batch = SparkEntry.queries("w18_ewma")(spark, dir)
+        .as[(Long, Long, Long, Long, Long, Double)].collect().toSet
+      assert(streamed == batch, s"stream $streamed\nvs batch $batch")
+      // the NULL-ts event opened user 7's series: it carries no lag
+      assert(streamed.exists(r => r._2 == 3L && r._5 == 128L), streamed.toString)
+    } finally q.stop()
+  }
+
+  /** Runs `out` (a query over `mem`) across a restart: a first query
+    * processes `batches.head` and stops, a fresh query on the same
+    * checkpoint processes the rest, one micro-batch each. Rows land in a
+    * parquet file sink, which (unlike the memory sink) outlives a query. */
+  private def acrossRestart(mem: MemoryStream[Ev], out: org.apache.spark.sql.Dataset[_],
+      batches: Seq[Seq[Ev]]): org.apache.spark.sql.DataFrame = {
+    val dir = tmpDir("srestart")
+    def start() = out.writeStream.format("parquet")
+      .option("checkpointLocation", s"$dir/ck").option("path", s"$dir/out")
+      .outputMode("append").start()
+    val first = start()
+    try { mem.addData(batches.head: _*); first.processAllAvailable() }
+    finally first.stop()
+    val resumed = start()
+    try batches.tail.foreach { b => mem.addData(b: _*); resumed.processAllAvailable() }
+    finally resumed.stop()
+    spark.read.parquet(s"$dir/out")
+  }
+
+  test("rsi resumes its deltas from the checkpoint: restarted stream ≡ batch w23_rsi") {
+    implicit val sqlCtx = spark.sqlContext
+    // the rsi fixture: user 7's first 10 events go to the first query, so
+    // its prev cents and 9 deltas must come back from the state store
+    // before the resumed query can emit (emissions start at event 15)
+    val vals = Seq(2.0, 3.0, 2.5, 4.0, 3.5, 5.0, 4.5, 6.0, 5.5, 7.0,
+      6.5, 8.0, 7.5, 9.0, 8.5, 10.0, 12.0)
+    val evs = vals.zipWithIndex.map { case (v, i) =>
+      Ev(i + 1L, ts(i + 1), 7L, "t", v)
+    } ++ Seq(Ev(21L, ts(1), 8L, "t", 2.0), Ev(22L, ts(2), 8L, "t", 3.0))
+    val mem = MemoryStream[Ev]
+    val streamed = acrossRestart(mem, Streams.rsi(mem.toDS()),
+        Seq(evs.filter(_.event_id <= 10), evs.filter(_.event_id > 10)))
+      .as[(Long, Long, Long, Long, Long, Option[Long])].collect().toSet
+    val dir = tmpDir("srsi-restart")
+    evs.toDF().withColumn("props", org.apache.spark.sql.functions.lit("{}"))
+      .write.parquet(s"$dir/events.parquet")
+    val batch = SparkEntry.queries("w23_rsi")(spark, dir)
+      .as[(Long, Long, Long, Long, Long, Option[Long])].collect().toSet
+    assert(streamed.nonEmpty && streamed == batch, s"stream $streamed\nvs batch $batch")
+  }
+
+  test("driftPsi resumes an open window and its timeout from the checkpoint") {
+    implicit val sqlCtx = spark.sqlContext
+    // the driftPsi fixture: W0's first half goes to the first query, so
+    // the open histogram and the watermark come back from the checkpoint
+    val ref = Seq(20L, 20L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)
+    val mem = MemoryStream[Ev]
+    val rows = acrossRestart(mem, Streams.driftPsi(mem.toDS(), ref,
+        windowMs = 60L * 60000L, watermarkAge = "0 seconds"), Seq(
+      Seq(Ev(1, ts(1), 1, "view", 5.0), Ev(2, ts(2), 1, "view", 15.0),
+        Ev(3, ts(3), 2, "view", 5.0), Ev(4, ts(4), 2, "view", 45.0)),
+      Seq(Ev(5, ts(10), 1, "view", 5.0), Ev(6, ts(11), 1, "view", 5.0),
+        Ev(7, ts(12), 2, "view", 5.0), Ev(8, ts(13), 2, "view", 50.0)),
+      Seq(Ev(9, ts(125), 3, "view", 30.0)),
+      Seq(Ev(10, ts(126), 3, "view", 30.0))))
+      .as[(Timestamp, Long, Double)].collect().toSeq
+    assert(rows.size == 1, s"W0 should close exactly once: $rows")
+    val (w0, nCur, psi) = rows.head
+    assert(w0 == ts(0) && nCur == 8L, rows.toString)
+    // the driftPsi case's recompute: smoothed cur (7,1,3,1,...,1) against
+    // smoothed ref (21,21,1,...,1)
+    val curS = Seq(7L, 1L, 3L) ++ Seq.fill(7)(1L)
+    val refS = ref.map(_ + 1L)
+    val (tCur, tRef) = (curS.sum, refS.sum)
+    import graft.functions.PinnedLog.lnNanos
+    val num = curS.indices.map { b =>
+      (BigInt(curS(b)) * tRef - BigInt(refS(b)) * tCur) *
+        (lnNanos(curS(b), 1L) + lnNanos(tRef, 1L)
+          - lnNanos(refS(b), 1L) - lnNanos(tCur, 1L))
+    }.sum
+    assert(psi == num.doubleValue / (tRef.toDouble * tCur.toDouble) / 1e9, s"psi=$psi")
+  }
+
+  test("keyed-twin and drift state encoders keep their state-store schemas") {
+    import org.apache.spark.sql.Encoders.product
+    // a changed state schema makes every existing checkpoint unreadable
+    val schemas = Map(
+      "EwmaState" -> product[Streams.EwmaState].schema.toDDL,
+      "DdState" -> product[Streams.DdState].schema.toDDL,
+      "CusumState" -> product[Streams.CusumState].schema.toDDL,
+      "MedState" -> product[Streams.MedState].schema.toDDL,
+      "BollState" -> product[Streams.BollState].schema.toDDL,
+      "RsiState" -> product[Streams.RsiState].schema.toDDL,
+      "TouchState" -> product[Streams.TouchState].schema.toDDL,
+      "DriftCounts" -> product[Streams.DriftCounts].schema.toDDL)
+    assert(schemas == Map(
+      "EwmaState" -> "recent ARRAY<BIGINT>",
+      "DdState" -> "peak BIGINT NOT NULL",
+      "CusumState" -> "ps BIGINT NOT NULL,minPs BIGINT NOT NULL",
+      "MedState" -> "recent ARRAY<BIGINT>",
+      "BollState" -> "recent ARRAY<BIGINT>",
+      "RsiState" -> "prevCents BIGINT NOT NULL,deltas ARRAY<BIGINT>",
+      "TouchState" -> "channel STRING",
+      "DriftCounts" -> "counts ARRAY<BIGINT>"))
+  }
 }

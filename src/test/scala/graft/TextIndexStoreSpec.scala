@@ -122,7 +122,7 @@ class TextIndexStoreSpec extends SparkSpec {
       3L -> "plain text with no probes",
       4L -> "join join join",
       5L -> "stream of words")
-    val q = graft.streaming.Streams.textIndexIngestion(
+    val q = graft.streaming.Streams.servingStoreIngestion(TextIndexStore,
       docs.toDF().toDF("doc_id", "text"), root, ckpt)
     try {
       docs.addData(rows.take(2): _*); q.processAllAvailable()
