@@ -47,8 +47,7 @@ object Main {
           .foreach { case (d, p) =>
             println(f"[graft] drift gate: tvd=$d%.4f psi=$p%.4f") }
         // the reference's Sunday-only OPTIMIZE rides the same task
-        if (Lakehouse.weeklyCompact(spark, Medallion.featuresPath(lake),
-            Seq("user_partition"), java.time.LocalDate.now()))
+        if (Medallion.weeklyMaintain(spark, lake, java.time.LocalDate.now()))
           println("[graft] weekly compaction ran")
         println("[graft] data-quality gate passed")
       }

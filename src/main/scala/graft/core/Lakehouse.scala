@@ -16,6 +16,18 @@ import org.apache.spark.sql.functions._
   *  - S11 OPTIMIZE bin_pack compaction          -> [[compact]]
   *  - A1  partition-pruned MAX watermark        -> [[watermark]]
   *
+  * The bucketed variants keep the reference's `address_partition` layout
+  * planner-visible (catalog bucketing). Each takes the table's one
+  * [[BucketedTable]] value, so a layout is declared once per table:
+  *  - bucketed CTAS / append                    -> [[ctasBucketed]], [[appendBucketed]]
+  *  - fresh-session re-registration + read      -> [[ensureBucketedTable]], [[readBucketed]]
+  *  - S8 full-vs-incremental                    -> [[loadIncrementalBucketed]]
+  *  - S7 MERGE (and its plan, and update alignment)
+  *                                              -> [[mergeUpsertBucketed]],
+  *                                                 [[bucketedMergePlan]], [[alignToBuckets]]
+  *  - S11 layout-preserving compaction          -> [[compactBucketed]], [[compactLayout]]
+  *  - plain-to-bucketed upgrade                 -> [[migrateToBucketed]]
+  *
   * All tables are directories of parquet files, optionally hive-partitioned.
   * At cluster scale the same code runs unchanged: the writers shuffle by the
   * partition column so each task owns whole output partitions (no
@@ -27,6 +39,32 @@ import org.apache.spark.sql.functions._
   * ethereum_wallet_features.sql:760-833 for MERGE).
   */
 object Lakehouse {
+
+  /** One bucketed lake table's layout: catalog name, lake path (the table
+    * is external there — the directory stays the source of truth and the
+    * catalog entry is metadata over it), bucket key and count, the
+    * within-bucket sort, and the hive partition columns. Every bucketed
+    * primitive below takes this value, so each table's layout is written
+    * once where the table is declared. */
+  final case class BucketedTable(name: String, path: String, key: String,
+      buckets: Int, sortCols: Seq[String] = Nil, partitionCols: Seq[String] = Nil)
+
+  object BucketedTable {
+    /** A layout whose catalog name is `prefix` + the lake root folded to
+      * an identifier — per-root unique, so concurrent lakes (tests,
+      * blue/green rebuilds) coexist in one catalog. */
+    def rooted(prefix: String, root: String, path: String, key: String,
+        buckets: Int, sortCols: Seq[String] = Nil,
+        partitionCols: Seq[String] = Nil): BucketedTable =
+      BucketedTable(prefix + root.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase,
+        path, key, buckets, sortCols, partitionCols)
+  }
+
+  /** Bucket count of the two DAGs' bucketed facts and feature tables. 32
+    * matches the local harness parallelism; the count is recorded beside
+    * the data ([[ensureBucketedTable]] refuses a mismatch), so changing it
+    * means rewriting every existing lake table. */
+  val FactBuckets = 32
 
   /** A table "exists" when it holds at least one data file — a directory
     * left by an all-filtered-out write (only _SUCCESS, or empty partition
@@ -67,7 +105,7 @@ object Lakehouse {
     * not once per downstream query. At 100 TB this is the difference
     * between re-shuffling the wallet-transactions fact for every feature
     * program that joins it and scanning co-located buckets in place.
-    * `sortCols` additionally sorts within buckets (parquet row-group
+    * The sort columns additionally sort within buckets (parquet row-group
     * min/max pruning on the sort key — e.g. the incremental readers'
     * `block_timestamp > watermark` filter skips whole row groups).
     *
@@ -76,30 +114,31 @@ object Lakehouse {
     * exactly one bucket and each bucket is ONE sorted file per hive
     * partition; without it every task emits up to `buckets` files
     * (tasks×buckets small files at scale, and a multi-file bucket forfeits
-    * the sorted-read path). `path` makes the table external (the lake
+    * the sorted-read path). The table is external at `t.path` (the lake
     * directory layout stays the source of truth; the catalog entry is
     * metadata over it). */
-  def ctasBucketed(df: DataFrame, table: String, key: String, buckets: Int,
-      sortCols: Seq[String] = Nil, partitionCols: Seq[String] = Nil,
-      path: Option[String] = None, preClustered: Boolean = false): Unit = {
+  def ctasBucketed(df: DataFrame, t: BucketedTable,
+      preClustered: Boolean = false): Unit = {
     // preClustered: the caller guarantees df is already hash-clustered on
     // `key` (e.g. the zero-exchange merge plan over same-bucketed inputs),
     // so the write-time repartition would be a pure no-op shuffle. Safe
     // unconditionally for CORRECTNESS — the writer derives each row's
     // bucket id from the row's key value, never from the task id — a wrong
     // claim only costs extra files per bucket.
-    val out = if (preClustered) df else df.repartition(buckets, col(key))
-    var w = out.write.mode(SaveMode.Overwrite).format("parquet")
-      .option("compression", "snappy")
-    path.foreach(p => w = w.option("path", p))
-    if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-    w = w.bucketBy(buckets, key)
-    if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
-    w.saveAsTable(table)
+    val out = if (preClustered) df else df.repartition(t.buckets, col(t.key))
+    bucketedWriter(out, t, SaveMode.Overwrite).option("path", t.path).saveAsTable(t.name)
     // record the layout beside the data: bucket COUNT is not recoverable
     // from the files (ids only lower-bound it), and re-registering with a
     // different count silently mis-buckets every zero-exchange join
-    path.foreach(p => writeLayoutMarker(df.sparkSession, p, key, buckets))
+    writeLayoutMarker(df.sparkSession, t.path, t.key, t.buckets)
+  }
+
+  private def bucketedWriter(df: DataFrame, t: BucketedTable, mode: SaveMode) = {
+    var w = df.write.mode(mode).format("parquet").option("compression", "snappy")
+    if (t.partitionCols.nonEmpty) w = w.partitionBy(t.partitionCols: _*)
+    w = w.bucketBy(t.buckets, t.key)
+    if (t.sortCols.nonEmpty) w = w.sortBy(t.sortCols.head, t.sortCols.tail: _*)
+    w
   }
 
   /** On-disk layout record for external bucketed tables ([[ctasBucketed]]
@@ -135,25 +174,17 @@ object Lakehouse {
     * (bucket, new hive partition), so the zero-exchange read property
     * survives incremental loads. The table must already exist (create it
     * with [[ctasBucketed]] or re-register with [[ensureBucketedTable]]). */
-  def appendBucketed(df: DataFrame, table: String, key: String, buckets: Int,
-      sortCols: Seq[String] = Nil, partitionCols: Seq[String] = Nil): Unit = {
-    val out = df.repartition(buckets, col(key))
-    var w = out.write.mode(SaveMode.Append).format("parquet")
-      .option("compression", "snappy")
-    if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-    w = w.bucketBy(buckets, key)
-    if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
-    w.saveAsTable(table)
-  }
+  def appendBucketed(df: DataFrame, t: BucketedTable): Unit =
+    bucketedWriter(df.repartition(t.buckets, col(t.key)), t, SaveMode.Append)
+      .saveAsTable(t.name)
 
   /** Restart safety for bucketed lake tables: a fresh session (new driver,
     * new in-memory catalog — or a rebuilt metastore) re-registers the
     * existing on-disk layout instead of rewriting it. Returns whether the
     * table is usable (registered, data present). No-op when already
     * registered. */
-  def ensureBucketedTable(spark: SparkSession, table: String, path: String,
-      key: String, buckets: Int, sortCols: Seq[String] = Nil,
-      partitionCols: Seq[String] = Nil): Boolean = {
+  def ensureBucketedTable(spark: SparkSession, t: BucketedTable): Boolean = {
+    val BucketedTable(table, path, key, buckets, sortCols, partitionCols) = t
     if (spark.catalog.tableExists(table)) return true
     if (!tableExists(spark, path)) return false
     // bucket ids live in the FILE NAMES (part-...-_00007.c000...): a lake
@@ -208,6 +239,12 @@ object Lakehouse {
     true
   }
 
+  /** A bucketed table through its catalog entry (re-registered from the
+    * on-disk layout on a fresh session), so consumers get the scan's key
+    * clustering; a plain path read for a legacy pre-bucketing lake. */
+  def readBucketed(spark: SparkSession, t: BucketedTable): DataFrame =
+    if (ensureBucketedTable(spark, t)) spark.table(t.name) else read(spark, t.path)
+
   /** Every data file under `dir` (2 levels deep, hive layouts) matches
     * Spark's bucketed-write naming (`part-NNNNN-<uuid>_BBBBB.cNNN.…`) — the
     * on-disk signature of a bucketed write. Anchored to the full pattern,
@@ -244,28 +281,40 @@ object Lakehouse {
     * file per touched (bucket, partition), so after K batches each bucket
     * holds K files — this collapses them back to one sorted file per
     * (bucket, partition) while PRESERVING the catalog bucket layout (the
-    * plain [[compact]] would destroy it, and refuses). Stages the rows out
-    * first because the rewrite overwrites the files it reads. */
-  def compactBucketed(spark: SparkSession, table: String, path: String,
-      key: String, buckets: Int, sortCols: Seq[String] = Nil,
-      partitionCols: Seq[String] = Nil): Unit = {
-    if (!spark.catalog.tableExists(table)) return
-    val staging = path.stripSuffix("/") + ".compact"
-    // Non-atomic window (same caveat as [[compact]]): readers racing the
-    // rewrite between the staging write and the saveAsTable commit see a
-    // dropped/empty table — schedule off-peak. Staging-dir lifecycle: a
-    // failed STAGING write cleans up after itself; a failed REWRITE keeps
-    // the staging dir — at that point the table files may already be
-    // dropped and staging is the only complete copy (recover by re-running
-    // the compaction: the staging Overwrite replaces any stale dir).
-    val sp = new org.apache.hadoop.fs.Path(staging)
+    * plain [[compact]] would destroy it, and refuses). Registers the
+    * on-disk layout first (a fresh session's catalog is empty); a no-op
+    * when the path holds no bucketed layout. Non-atomic window (same
+    * caveat as [[compact]]): readers racing the rewrite between the
+    * staging write and the saveAsTable commit see a dropped/empty table —
+    * schedule off-peak. */
+  def compactBucketed(spark: SparkSession, t: BucketedTable): Unit =
+    if (ensureBucketedTable(spark, t))
+      rebucketVia(spark, spark.table(t.name), t, ".compact")
+
+  /** S11 for a table declared bucketed: the layout-preserving
+    * [[compactBucketed]] when the lake holds the bucketed layout, the
+    * plain bin-pack [[compact]] on a legacy plain-layout lake, nothing
+    * when the table has no data. */
+  def compactLayout(spark: SparkSession, t: BucketedTable): Unit =
+    if (tableExists(spark, t.path)) {
+      if (ensureBucketedTable(spark, t)) compactBucketed(spark, t)
+      else compact(spark, t.path, t.partitionCols)
+    }
+
+  /** Rewrite `t` from `rows` through [[ctasBucketed]], staging the rows out
+    * first because the rewrite overwrites the files they are read from.
+    * Staging-dir lifecycle: a failed STAGING write cleans up after itself;
+    * a failed REWRITE keeps the staging dir — at that point the table
+    * files may already be dropped and staging is the only complete copy
+    * (recover by re-running: the staging Overwrite replaces a stale dir). */
+  private def rebucketVia(spark: SparkSession, rows: DataFrame,
+      t: BucketedTable, suffix: String): Unit = {
+    val sp = new org.apache.hadoop.fs.Path(t.path.stripSuffix("/") + suffix)
     val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      spark.table(table).write.mode(SaveMode.Overwrite)
-        .option("compression", "snappy").parquet(staging)
-    } catch { case t: Throwable => fs.delete(sp, true); throw t }
-    ctasBucketed(spark.read.parquet(staging), table, key, buckets,
-      sortCols, partitionCols, Some(path))
+    try rows.write.mode(SaveMode.Overwrite).option("compression", "snappy")
+      .parquet(sp.toString)
+    catch { case e: Throwable => fs.delete(sp, true); throw e }
+    ctasBucketed(spark.read.parquet(sp.toString), t)
     fs.delete(sp, true)
   }
 
@@ -276,35 +325,25 @@ object Lakehouse {
     * anti-join identity guard. */
   def loadIncrementalBucketed(
       spark: SparkSession,
-      table: String,
-      path: String,
-      bucketKey: String,
-      buckets: Int,
-      sortCols: Seq[String],
+      t: BucketedTable,
       watermarkCol: String,
-      partitionCols: Seq[String],
       keys: Seq[String],
       full: () => DataFrame,
       incremental: Any => DataFrame): Unit = {
-    val registered =
-      ensureBucketedTable(spark, table, path, bucketKey, buckets, sortCols, partitionCols)
-    watermark(spark, path, watermarkCol, partitionCols.headOption.getOrElse(watermarkCol)) match {
-      case None =>
-        ctasBucketed(full(), table, bucketKey, buckets, sortCols, partitionCols, Some(path))
+    val registered = ensureBucketedTable(spark, t)
+    val partitionCols = t.partitionCols
+    watermark(spark, t.path, watermarkCol,
+        partitionCols.headOption.getOrElse(watermarkCol)) match {
+      case None => ctasBucketed(full(), t)
       case Some(wm) =>
         val newRows = incremental(wm)
         // same null-safe identity guard as antiJoinAppend, key-pruned
         // scan — ALSO partition-pruned to the batch's own partitions
         // (sound because the identity keys carry the partition columns;
         // see batchPartitionPrune)
-        val target0 = read(spark, path)
-        val target = batchPartitionPrune(newRows, partitionCols, keys)
-          .fold(target0)(target0.filter)
-        val t = target.select(keys.map(col): _*).alias("t")
-        val cond = keys.map(k => newRows(k) <=> col(s"t.$k")).reduce(_ && _)
-        val fresh = newRows.join(t, cond, "left_anti")
-        if (registered)
-          appendBucketed(fresh, table, bucketKey, buckets, sortCols, partitionCols)
+        val fresh = absentFrom(spark, newRows, t.path, keys,
+          batchPartitionPrune(newRows, partitionCols, keys))
+        if (registered) appendBucketed(fresh, t)
         else
           // LEGACY lake: the path holds a plain (pre-bucketing) layout the
           // catalog refuses to register. appendBucketed would CREATE a
@@ -312,7 +351,7 @@ object Lakehouse {
           // readers keep the old files — silent data loss. Keep appending
           // plain (readers fall back to the path read) until the layout is
           // upgraded once via [[migrateToBucketed]].
-          appendPartitioned(fresh, path, partitionCols)
+          appendPartitioned(fresh, t.path, partitionCols)
     }
   }
 
@@ -321,25 +360,10 @@ object Lakehouse {
     * rewrites through [[ctasBucketed]]. No-op when already bucketed or the
     * path has no data. After this, the incremental loader appends
     * bucket-aligned files and consumers get the zero-exchange reads. */
-  def migrateToBucketed(spark: SparkSession, table: String, path: String,
-      key: String, buckets: Int, sortCols: Seq[String] = Nil,
-      partitionCols: Seq[String] = Nil): Unit = {
-    if (ensureBucketedTable(spark, table, path, key, buckets, sortCols, partitionCols))
-      return // already bucketed (and now registered)
-    if (!tableExists(spark, path)) return
-    val staging = path.stripSuffix("/") + ".migrate"
-    // same staging-dir lifecycle as [[compactBucketed]]: clean up a failed
-    // staging write; keep staging if the rewrite fails (recovery copy)
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      read(spark, path).write.mode(SaveMode.Overwrite)
-        .option("compression", "snappy").parquet(staging)
-    } catch { case t: Throwable => fs.delete(sp, true); throw t }
-    ctasBucketed(spark.read.parquet(staging), table, key, buckets,
-      sortCols, partitionCols, Some(path))
-    fs.delete(sp, true)
-  }
+  def migrateToBucketed(spark: SparkSession, t: BucketedTable): Unit =
+    // already bucketed (and now registered), or no data: nothing to do
+    if (!ensureBucketedTable(spark, t) && tableExists(spark, t.path))
+      rebucketVia(spark, read(spark, t.path), t, ".migrate")
 
   /** True when the file scans feeding `df` deliver the `key` clustering —
     * at least one scan is catalog-bucketed on exactly (`key`), and every
@@ -373,8 +397,8 @@ object Lakehouse {
     * whose child partitioning already equals it); otherwise it relocates
     * the ONE delta-sized shuffle the merge join would insert anyway to
     * BEFORE the caller's cache, leaving the merge plan exchange-free. */
-  def alignToBuckets(df: DataFrame, key: String, buckets: Int): DataFrame =
-    df.repartition(buckets, col(key))
+  def alignToBuckets(df: DataFrame, t: BucketedTable): DataFrame =
+    df.repartition(t.buckets, col(t.key))
 
   /** S4: plain partitioned append. */
   def appendPartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
@@ -400,19 +424,25 @@ object Lakehouse {
       prunePartitions: Option[Column] = None): Unit = {
     if (!tableExists(spark, path)) {
       ctas(newRows, path, partitionCols)
-    } else {
-      val target0 = read(spark, path)
-      val target = prunePartitions.fold(target0)(target0.filter).select(keys.map(col): _*)
-      // null-safe key equality: a USING-style join compares with EqualTo,
-      // under which a NULL key column (e.g. a NULL amount in the wallet-tx
-      // identity) never matches its stored copy — the same row would then
-      // re-append on EVERY incremental cycle that re-selects the boundary
-      // block, growing the table unboundedly
-      val t = target.alias("t")
-      val cond = keys.map(k => newRows(k) <=> col(s"t.$k")).reduce(_ && _)
-      val fresh = newRows.join(t, cond, "left_anti")
-      appendPartitioned(fresh, path, partitionCols)
-    }
+    } else
+      appendPartitioned(absentFrom(spark, newRows, path, keys, prunePartitions),
+        path, partitionCols)
+  }
+
+  /** The identity guard shared by every NOT EXISTS append: the rows of
+    * `newRows` whose `keys` tuple is absent from the table at `path`
+    * (scanned key-columns only, and only the `prune` partitions). The
+    * key equality is null-safe: a USING-style join compares with EqualTo,
+    * under which a NULL key column (e.g. a NULL amount in the wallet-tx
+    * identity) never matches its stored copy — the same row would then
+    * re-append on EVERY incremental cycle that re-selects the boundary
+    * block, growing the table unboundedly. */
+  private def absentFrom(spark: SparkSession, newRows: DataFrame, path: String,
+      keys: Seq[String], prune: Option[Column]): DataFrame = {
+    val target = read(spark, path)
+    val t = prune.fold(target)(target.filter).select(keys.map(col): _*).alias("t")
+    val cond = keys.map(k => newRows(k) <=> col(s"t.$k")).reduce(_ && _)
+    newRows.join(t, cond, "left_anti")
   }
 
   /** S6 at 100 TB: [[antiJoinAppend]] behind a persistent key-set Bloom
@@ -465,20 +495,10 @@ object Lakehouse {
           }
           val probable =
             BloomSkipping.mightContainHashed(spark, bytes, keyHash)
-          val target0 = read(spark, path)
-          val target = prunePartitions.fold(target0)(target0.filter)
-            .select(keys.map(col): _*)
-          val t = target.alias("t")
-          val cond = keys.map(k => newRows(k) <=> col(s"t.$k")).reduce(_ && _)
-          newRows.filter(!probable).unionByName(
-            newRows.filter(probable).join(t, cond, "left_anti"))
+          newRows.filter(!probable).unionByName(absentFrom(spark,
+            newRows.filter(probable), path, keys, prunePartitions))
         case None => // no/torn guard: the plain exact path
-          val target0 = read(spark, path)
-          val target = prunePartitions.fold(target0)(target0.filter)
-            .select(keys.map(col): _*)
-          val t = target.alias("t")
-          val cond = keys.map(k => newRows(k) <=> col(s"t.$k")).reduce(_ && _)
-          newRows.join(t, cond, "left_anti")
+          absentFrom(spark, newRows, path, keys, prunePartitions)
       }
       // the admitted slice feeds the guard merge AND the data append:
       // persist once, release after both (CacheScope discipline)
@@ -548,23 +568,30 @@ object Lakehouse {
     // commit is an atomic-ish directory swap rather than a cached recompute.
     val staging = path.stripSuffix("/") + ".staging"
     ctas(merged, staging, partitionCols)
+    swapIn(spark, staging, path, wholeTable = touchedPartitions.isEmpty)
+  }
+
+  /** The staged merge's commit: replace the table dir with `staging`
+    * wholesale, or (a partition-scoped merge) move each staged partition
+    * dir over its live counterpart, leaving untouched partitions' files
+    * as they are, then drop the emptied staging dir. */
+  private def swapIn(spark: SparkSession, staging: String, path: String,
+      wholeTable: Boolean): Unit = {
     val hp = new org.apache.hadoop.fs.Path(path)
+    val sp = new org.apache.hadoop.fs.Path(staging)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touchedPartitions match {
-      case None =>
-        fs.delete(hp, true)
-        fs.rename(new org.apache.hadoop.fs.Path(staging), hp)
-      case Some(_) =>
-        // rewrite only touched partitions: move each staged partition dir in
-        val staged = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
-        staged.foreach { st =>
-          if (st.isDirectory) {
-            val dest = new org.apache.hadoop.fs.Path(hp, st.getPath.getName)
-            if (fs.exists(dest)) fs.delete(dest, true)
-            fs.rename(st.getPath, dest)
-          }
+    if (wholeTable) {
+      fs.delete(hp, true)
+      fs.rename(sp, hp)
+    } else {
+      fs.listStatus(sp).foreach { st =>
+        if (st.isDirectory) {
+          val dest = new org.apache.hadoop.fs.Path(hp, st.getPath.getName)
+          if (fs.exists(dest)) fs.delete(dest, true)
+          fs.rename(st.getPath, dest)
         }
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      }
+      fs.delete(sp, true)
     }
   }
 
@@ -575,7 +602,7 @@ object Lakehouse {
     * the semantics but its full-outer join re-shuffles the target on the
     * merge key EVERY incremental cycle. Here the target is read through its
     * bucketed catalog entry, so the scan itself delivers
-    * HashPartitioning(bucketKey, buckets): with bucket-aligned updates
+    * HashPartitioning(key, buckets): with bucket-aligned updates
     * (derived from a same-bucketed fact) the full-outer join plans ZERO
     * bucket-key exchanges, and the staged rewrite is written preClustered —
     * the per-cycle merge cost drops from O(table shuffle) to O(touched
@@ -584,7 +611,7 @@ object Lakehouse {
     * co-partitioning (`spark.sql.requireAllClusterKeysForCoPartition=false`
     * — set in [[Graft.session]]).
     *
-    * `bucketKey` must be non-null by construction (it is compared with `=`,
+    * The bucket key must be one of `keys` and non-null by construction (it is compared with `=`,
     * see [[mergeFrames]] `eqKeys`). Falls back to the path-based merge on a
     * LEGACY plain-layout lake (same contract as [[loadIncrementalBucketed]]:
     * never a corrupting half-bucketed write — upgrade once via
@@ -594,83 +621,59 @@ object Lakehouse {
   def mergeUpsertBucketed(
       spark: SparkSession,
       updates: DataFrame,
-      table: String,
-      path: String,
+      t: BucketedTable,
       keys: Seq[String],
-      bucketKey: String,
-      buckets: Int,
-      sortCols: Seq[String] = Nil,
-      partitionCols: Seq[String] = Nil,
       touchedPartitions: Option[Column] = None,
       keepFromTarget: Set[String] = Set.empty): Unit = {
-    require(keys.contains(bucketKey),
-      s"bucket key $bucketKey must be part of the merge keys ${keys.mkString(",")}")
+    require(keys.contains(t.key),
+      s"bucket key ${t.key} must be part of the merge keys ${keys.mkString(",")}")
     // same contract as mergeUpsert: the partition-scoped commit moves
     // directories, so it is meaningless without partition columns
-    require(touchedPartitions.isEmpty || partitionCols.nonEmpty,
+    require(touchedPartitions.isEmpty || t.partitionCols.nonEmpty,
       "touchedPartitions requires partitionCols: an unpartitioned staging " +
         "dir has no partition directories to move and the merge would be lost")
-    if (!tableExists(spark, path)) {
-      ctasBucketed(updates, table, bucketKey, buckets, sortCols, partitionCols,
-        Some(path), preClustered = true)
+    if (!tableExists(spark, t.path)) {
+      ctasBucketed(updates, t, preClustered = true)
       return
     }
-    if (!ensureBucketedTable(spark, table, path, bucketKey, buckets, sortCols,
-        partitionCols)) {
-      mergeUpsert(spark, updates, path, keys, partitionCols, touchedPartitions,
+    if (!ensureBucketedTable(spark, t)) {
+      mergeUpsert(spark, updates, t.path, keys, t.partitionCols, touchedPartitions,
         keepFromTarget)
       return
     }
-    val merged = bucketedMergePlan(spark, table, updates, keys, bucketKey,
-      touchedPartitions, keepFromTarget)
+    val merged = bucketedMergePlan(spark, t, updates, keys, touchedPartitions,
+      keepFromTarget)
 
     // Staged swap, same as mergeUpsert (the merged plan reads the files the
     // swap replaces) — but staged through a BUCKETED write so the layout
     // survives the merge. preClustered: merged comes off the co-partitioned
     // full-outer join, already clustered on the bucket key.
-    val staging = path.stripSuffix("/") + ".staging"
-    val stagingTable = table + "_staging"
-    spark.sql(s"DROP TABLE IF EXISTS $stagingTable")
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = t.copy(name = t.name + "_staging",
+      path = t.path.stripSuffix("/") + ".staging")
+    spark.sql(s"DROP TABLE IF EXISTS ${staging.name}")
+    val sp = new org.apache.hadoop.fs.Path(staging.path)
     // a stale staging dir (crashed previous merge) would fail the CTAS —
     // CREATE TABLE AS SELECT refuses a non-empty location
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    ctasBucketed(merged, stagingTable, bucketKey, buckets, sortCols,
-      partitionCols, Some(staging), preClustered = true)
-    spark.sql(s"DROP TABLE $stagingTable") // external: the staged files stay
-    touchedPartitions match {
-      case None =>
-        fs.delete(hp, true)
-        fs.rename(new org.apache.hadoop.fs.Path(staging), hp)
-      case Some(_) =>
-        val staged = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
-        staged.foreach { st =>
-          if (st.isDirectory) {
-            val dest = new org.apache.hadoop.fs.Path(hp, st.getPath.getName)
-            if (fs.exists(dest)) fs.delete(dest, true)
-            fs.rename(st.getPath, dest)
-          }
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    }
-    spark.catalog.refreshTable(table)
-    if (partitionCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $table")
+    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
+    ctasBucketed(merged, staging, preClustered = true)
+    spark.sql(s"DROP TABLE ${staging.name}") // external: the staged files stay
+    swapIn(spark, staging.path, t.path, wholeTable = touchedPartitions.isEmpty)
+    spark.catalog.refreshTable(t.name)
+    if (t.partitionCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE ${t.name}")
   }
 
   /** The bucketed merge's read plan ([[mergeUpsertBucketed]] minus the
     * write) — exposed so specs can assert its physical shape (zero
     * bucket-key exchanges) on the exact plan the merge executes. */
-  def bucketedMergePlan(spark: SparkSession, table: String, updates: DataFrame,
-      keys: Seq[String], bucketKey: String,
-      touchedPartitions: Option[Column] = None,
+  def bucketedMergePlan(spark: SparkSession, t: BucketedTable, updates: DataFrame,
+      keys: Seq[String], touchedPartitions: Option[Column] = None,
       keepFromTarget: Set[String] = Set.empty): DataFrame = {
-    val target = spark.table(table)
+    val target = spark.table(t.name)
     val cols = target.columns.toSeq
     require(updates.columns.toSeq.sorted == cols.sorted,
       s"merge schema mismatch: ${updates.columns.mkString(",")} vs ${cols.mkString(",")}")
     val scoped = touchedPartitions.fold(target)(target.filter)
-    mergeFrames(scoped, updates, keys, keepFromTarget, eqKeys = Set(bucketKey))
+    mergeFrames(scoped, updates, keys, keepFromTarget, eqKeys = Set(t.key))
   }
 
   /** The MERGE semantics as a pure DataFrame transform (shared by
@@ -773,7 +776,8 @@ object Lakehouse {
   /** The reference's weekly OPTIMIZE schedule (features_pipeline.py:
     * 128-138): compaction runs only on Sundays, riding along the normal
     * incremental cycle instead of a separate maintenance DAG. Returns
-    * whether it ran. */
+    * whether it ran. Plain-layout tables only ([[compact]] refuses a
+    * bucketed one); the DAGs' bucketed tables take their `weeklyMaintain`. */
   def weeklyCompact(spark: SparkSession, path: String, partitionCols: Seq[String],
       today: java.time.LocalDate): Boolean =
     if (today.getDayOfWeek == java.time.DayOfWeek.SUNDAY) {

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.{Graft, Lakehouse, StoreRoots}
+import graft.core.Lakehouse.BucketedTable
 import graft.queries.{EmbeddingParity, SimilarityQueries}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -83,9 +84,6 @@ object AnnStore extends ServingStore {
 
   val Buckets = 32
 
-  private def ident(root: String): String =
-    root.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
-  def assignTable(root: String): String = "ann_assign_" + ident(root)
   def centroidsPath(root: String): String = s"$root/ann/centroids"
   def assignPath(root: String): String = s"$root/ann/assign"
 
@@ -93,8 +91,24 @@ object AnnStore extends ServingStore {
 
   private def annBase(root: String): String = s"${root.stripSuffix("/")}/ann"
   private def genDir(root: String, g: Long): String = s"${annBase(root)}/gen-$g"
-  def assignTable(root: String, g: Long): String =
-    if (g == 0L) assignTable(root) else s"${assignTable(root)}_g$g"
+
+  /** Generation `g`'s inverted file, bucketed and sorted on the cell id:
+    * a probe's nprobe cells prune to whole buckets. Generation 0 is the
+    * initial layout; later ones carry a `_g<g>` name suffix. */
+  def assignLayout(root: String, g: Long = 0L): BucketedTable = {
+    val t = BucketedTable.rooted("ann_assign_", root, assignPath(root, g), "cid",
+      Buckets, sortCols = Seq("cid"))
+    if (g == 0L) t else t.copy(name = s"${t.name}_g$g")
+  }
+  def assignTable(root: String): String = assignLayout(root).name
+  def assignTable(root: String, g: Long): String = assignLayout(root, g).name
+
+  /** Generation `g`'s layout while it is built in the private dir `tmp`
+    * (published by rename, then re-registered at [[assignLayout]]). */
+  private def privateBuild(root: String, g: Long, tmp: String): BucketedTable = {
+    val t = assignLayout(root, g)
+    t.copy(name = t.name + "_build", path = s"$tmp/assign")
+  }
   def centroidsPath(root: String, g: Long): String =
     if (g == 0L) centroidsPath(root) else s"${genDir(root, g)}/centroids"
   def assignPath(root: String, g: Long): String =
@@ -117,8 +131,7 @@ object AnnStore extends ServingStore {
     * on-disk layout marker, [[Lakehouse.ensureBucketedTable]]). */
   private def resolve(spark: SparkSession, root: String): Long = {
     val g = currentGen(spark, root)
-    Lakehouse.ensureBucketedTable(spark, assignTable(root, g),
-      assignPath(root, g), "cid", Buckets, sortCols = Seq("cid"))
+    Lakehouse.ensureBucketedTable(spark, assignLayout(root, g))
     g
   }
 
@@ -173,11 +186,7 @@ object AnnStore extends ServingStore {
   def ensureBuilt(spark: SparkSession, root: String,
       embeddings: => DataFrame): Boolean = {
     val g = currentGen(spark, root)
-    // sortCols must match the CTAS layout: a post-restart re-registration
-    // without them would make the next appendBucketed (which sorts) fail
-    // on a bucketing-spec mismatch
-    val haveAssign = Lakehouse.ensureBucketedTable(spark, assignTable(root, g),
-      assignPath(root, g), "cid", Buckets, sortCols = Seq("cid"))
+    val haveAssign = Lakehouse.ensureBucketedTable(spark, assignLayout(root, g))
     if (haveAssign && Lakehouse.tableExists(spark, centroidsPath(root, g)))
       return false
     val n = quantized(embeddings).persist()
@@ -186,28 +195,25 @@ object AnnStore extends ServingStore {
       // (possibly non-parquet-backed) plan scanned twice more below
       val total = n.count()
       val stride = SimilarityQueries.centroidStride(total)
-      def build(centPath: String, assignTbl: String, assignDir: String,
-          markerDir: String): Unit = {
+      def build(centPath: String, assignT: BucketedTable, markerDir: String): Unit = {
         val cent = n.filter(pmod(col("vec_id"), lit(stride)) === 0)
           .select(col("vec_id").as("cid"), col("qv").as("c_qv"), col("nq").as("c_nq"))
         Lakehouse.ctas(cent, centPath)
         val assign = rankCells(n, Lakehouse.read(spark, centPath), 1)
           .select(col("cid"), col("vec_id"), col("qv"), col("nq"))
-        Lakehouse.ctasBucketed(assign, assignTbl, "cid", Buckets,
-          sortCols = Seq("cid"), path = Some(assignDir))
+        Lakehouse.ctasBucketed(assign, assignT)
         writeBaseRows(spark, markerDir, total)
       }
       if (g == 0L)
-        build(centroidsPath(root, 0L), assignTable(root, 0L),
-          assignPath(root, 0L), baseDirOf(root, 0L))
+        build(centroidsPath(root, 0L), assignLayout(root), baseDirOf(root, 0L))
       else {
         val next = g + 1
-        val buildTbl = assignTable(root, next) + "_build"
         StoreRoots.ensure(spark, genDir(root, next)) { tmp =>
-          build(s"$tmp/centroids", buildTbl, s"$tmp/assign", tmp)
+          val buildT = privateBuild(root, next, tmp)
+          build(s"$tmp/centroids", buildT, tmp)
           // the build registration points at the PRIVATE dir — drop it
           // (external table, files stay); re-registered post-rename
-          spark.sql(s"DROP TABLE IF EXISTS $buildTbl")
+          spark.sql(s"DROP TABLE IF EXISTS ${buildT.name}")
           ()
         }
         resolve(spark, root)
@@ -245,8 +251,7 @@ object AnnStore extends ServingStore {
       spark.table(assignTable(root, g)).select("vec_id"), Seq("vec_id"), "left_anti")
     val assign = rankCells(quantized(fresh), centroids(spark, root, g), 1)
       .select(col("cid"), col("vec_id"), col("qv"), col("nq"))
-    Lakehouse.appendBucketed(assign, assignTable(root, g), "cid", Buckets,
-      sortCols = Seq("cid"))
+    Lakehouse.appendBucketed(assign, assignLayout(root, g))
   }
 
   // ------------------------------------------------------------- REFRESH
@@ -341,8 +346,7 @@ object AnnStore extends ServingStore {
     * next refresh's pre-carry, which runs before `from` is ever swept). */
   private def carryInto(spark: SparkSession, root: String,
       from: Long, to: Long): Unit = {
-    if (!Lakehouse.ensureBucketedTable(spark, assignTable(root, from),
-        assignPath(root, from), "cid", Buckets, sortCols = Seq("cid"))) return
+    if (!Lakehouse.ensureBucketedTable(spark, assignLayout(root, from))) return
     var pass = 0
     var drained = false
     while (!drained && pass < 4) {
@@ -354,8 +358,7 @@ object AnnStore extends ServingStore {
       else {
         val carried = rankCells(missed, centroids(spark, root, to), 1)
           .select(col("cid"), col("vec_id"), col("qv"), col("nq"))
-        Lakehouse.appendBucketed(carried, assignTable(root, to), "cid",
-          Buckets, sortCols = Seq("cid"))
+        Lakehouse.appendBucketed(carried, assignLayout(root, to))
       }
       pass += 1
     }
@@ -398,8 +401,8 @@ object AnnStore extends ServingStore {
     onDiskGens(spark, root).filter(_ < g).foreach(carryInto(spark, root, _, g))
     val next = g + 1
     val stored = spark.table(assignTable(root, g)).select("vec_id", "qv", "nq")
-    val buildTable = assignTable(root, next) + "_build"
     StoreRoots.ensure(spark, genDir(root, next)) { tmp =>
+      val buildT = privateBuild(root, next, tmp)
       val n = stored.persist()
       try {
         val total = n.count()
@@ -421,12 +424,11 @@ object AnnStore extends ServingStore {
         val centStored = Lakehouse.read(spark, s"$tmp/centroids")
         val assign = rankCells(n, centStored, 1)
           .select(col("cid"), col("vec_id"), col("qv"), col("nq"))
-        Lakehouse.ctasBucketed(assign, buildTable, "cid", Buckets,
-          sortCols = Seq("cid"), path = Some(s"$tmp/assign"))
+        Lakehouse.ctasBucketed(assign, buildT)
         // the build registration points at the PRIVATE dir — drop it (the
         // table is external, the files stay); the published location is
         // re-registered from its layout marker after the rename
-        spark.sql(s"DROP TABLE IF EXISTS $buildTable")
+        spark.sql(s"DROP TABLE IF EXISTS ${buildT.name}")
         writeBaseRows(spark, tmp, total)
       } finally { n.unpersist(); () }
     }

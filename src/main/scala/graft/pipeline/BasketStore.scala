@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.{Lakehouse, ManifestSnapshots}
+import graft.core.Lakehouse.BucketedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,10 +56,11 @@ object BasketStore extends ServingStore {
 
   val Buckets = 32
 
-  private def ident(root: String): String =
-    root.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
-  def edgesTable(root: String): String = "basket_edges_" + ident(root)
   def edgesPath(root: String): String = s"$root/basket/edges"
+  /** The candidate edge set, bucketed on src. */
+  def edgesLayout(root: String): BucketedTable =
+    BucketedTable.rooted("basket_edges_", root, edgesPath(root), "src", Buckets)
+  def edgesTable(root: String): String = edgesLayout(root).name
   def pairsDir(root: String): String = s"$root/basket/pairs"
   def itemsDir(root: String): String = s"$root/basket/items"
   def degreesDir(root: String): String = s"$root/basket/degrees"
@@ -166,8 +168,7 @@ object BasketStore extends ServingStore {
 
   override def ensureBuilt(spark: SparkSession, root: String,
       corpus: => DataFrame): Boolean = {
-    val haveEdges = Lakehouse.ensureBucketedTable(spark, edgesTable(root),
-      edgesPath(root), "src", Buckets)
+    val haveEdges = Lakehouse.ensureBucketedTable(spark, edgesLayout(root))
     // already-built gate keys on metaDir — the LAST-written table — so a
     // crash after the edges CTAS but before the degrees/meta writes falls
     // through here and rebuilds (every write below restates: writeFull is
@@ -183,8 +184,7 @@ object BasketStore extends ServingStore {
     ManifestSnapshots.writeFull(itemCounts(c).withColumn(WmCol, lit(wm)),
       itemsDir(root), partitionCols = Seq(WmCol))
     val edges = candidateEdges(c)
-    Lakehouse.ctasBucketed(edges, edgesTable(root), "src", Buckets,
-      path = Some(edgesPath(root)))
+    Lakehouse.ctasBucketed(edges, edgesLayout(root))
     val deg = edges.unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .groupBy(col("src").as("node")).agg(count(lit(1)).cast("long").as("d"))
     ManifestSnapshots.writeFull(deg.withColumn(WmCol, lit(wm)),
@@ -221,8 +221,7 @@ object BasketStore extends ServingStore {
     * per bucket again. Rollup tables need no maintenance (each commit is
     * already a full restatement). */
   override def maintain(spark: SparkSession, root: String): Unit =
-    Lakehouse.compactBucketed(spark, edgesTable(root), edgesPath(root),
-      "src", Buckets)
+    Lakehouse.compactBucketed(spark, edgesLayout(root))
 
   /** O(delta) admission of one whole-orders batch: only rows above the
     * stored orderkey watermark are folded (replay guard #1); every
@@ -292,7 +291,7 @@ object BasketStore extends ServingStore {
         newEdges.unionAll(newEdges.select(col("dst").as("src"), col("src").as("dst")))
           .groupBy(col("src").as("node")).agg(count(lit(1)).cast("long").as("d")),
         Seq("node"), "d")
-      Lakehouse.appendBucketed(newEdges, edgesTable(root), "src", Buckets)
+      Lakehouse.appendBucketed(newEdges, edgesLayout(root))
     } else if (storedWm(spark, degreesDir(root)).forall(_ < wm)) {
       // no new edges but the watermark must still advance on degrees so a
       // later replay check sees one consistent frontier

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.Lakehouse
+import graft.core.Lakehouse.BucketedTable
 import graft.queries.DedupQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -76,12 +77,15 @@ object DedupStore extends ServingStore {
   val Buckets = 32
   val JaccardThreshold = 0.1
 
-  private def ident(root: String): String =
-    root.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
-  def bandsTable(root: String): String = "dedup_bands_" + ident(root)
-  def shinglesTable(root: String): String = "dedup_shingles_" + ident(root)
   def bandsPath(root: String): String = s"$root/dedup/bands"
   def shinglesPath(root: String): String = s"$root/dedup/shingles"
+  /** The LSH band index, bucketed on the band hash, and the per-doc
+    * shingle arrays, bucketed on doc_id. */
+  def bandsLayout(root: String): BucketedTable =
+    BucketedTable.rooted("dedup_bands_", root, bandsPath(root), "bh", Buckets)
+  def shinglesLayout(root: String): BucketedTable =
+    BucketedTable.rooted("dedup_shingles_", root, shinglesPath(root), "doc_id", Buckets)
+  def shinglesTable(root: String): String = shinglesLayout(root).name
 
   private def withShingleInput(documents: DataFrame): DataFrame =
     documents.withColumn("tk", split(col("text"), " "))
@@ -117,16 +121,12 @@ object DedupStore extends ServingStore {
     * fresh session, build it from `corpus` only when absent. Returns true
     * when the store was (re)built, false when it already existed. */
   def ensureBuilt(spark: SparkSession, root: String, corpus: => DataFrame): Boolean = {
-    val haveBands = Lakehouse.ensureBucketedTable(spark, bandsTable(root),
-      bandsPath(root), "bh", Buckets)
-    val haveShingles = Lakehouse.ensureBucketedTable(spark, shinglesTable(root),
-      shinglesPath(root), "doc_id", Buckets)
+    val haveBands = Lakehouse.ensureBucketedTable(spark, bandsLayout(root))
+    val haveShingles = Lakehouse.ensureBucketedTable(spark, shinglesLayout(root))
     if (haveBands && haveShingles) return false
     val (bands, hsh) = signatures(corpus)
-    Lakehouse.ctasBucketed(bands, bandsTable(root), "bh", Buckets,
-      path = Some(bandsPath(root)))
-    Lakehouse.ctasBucketed(hsh, shinglesTable(root), "doc_id", Buckets,
-      path = Some(shinglesPath(root)))
+    Lakehouse.ctasBucketed(bands, bandsLayout(root))
+    Lakehouse.ctasBucketed(hsh, shinglesLayout(root))
     true
   }
 
@@ -137,8 +137,8 @@ object DedupStore extends ServingStore {
       preShingled: Option[DataFrame] = None): Unit = {
     val (bands, hsh) = preShingled
       .map(signaturesFromShingles).getOrElse(signatures(admitted))
-    Lakehouse.appendBucketed(bands, bandsTable(root), "bh", Buckets)
-    Lakehouse.appendBucketed(hsh, shinglesTable(root), "doc_id", Buckets)
+    Lakehouse.appendBucketed(bands, bandsLayout(root))
+    Lakehouse.appendBucketed(hsh, shinglesLayout(root))
   }
 
   /** O(delta) batch admission against the stored index. Output per batch
@@ -161,7 +161,7 @@ object DedupStore extends ServingStore {
     // both admission joins (vs stored, vs batch) consume the batch bands
     val bBands = bBands0.persist()
 
-    val sBands = spark.table(bandsTable(root))
+    val sBands = spark.table(bandsLayout(root).name)
     val sHsh = spark.table(shinglesTable(root))
 
     def pairs(aBands: DataFrame): DataFrame =

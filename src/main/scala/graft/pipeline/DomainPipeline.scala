@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.Lakehouse
+import graft.core.Lakehouse.{BucketedTable, FactBuckets}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,31 +32,26 @@ object DomainPipeline {
   def featuresPath(lake: String) = s"$lake/features/ethereum_wallet_features"
   def coinBalancesPath(lake: String) = s"$lake/features/ethereum_wallet_coin_balances"
 
-  /** Catalog name of the bucketed wallet-transactions fact — per-lake
-    * unique so concurrent lakes (tests, blue/green rebuilds) coexist in
-    * one catalog. */
-  def walletTxTable(lake: String): String =
-    "ethereum_wallet_transactions_" + lakeSuffix(lake)
-
-  /** Catalog names of the bucketed features tables (same per-lake scheme). */
-  def featuresTable(lake: String): String =
-    "ethereum_wallet_features_" + lakeSuffix(lake)
-  def coinBalancesTable(lake: String): String =
-    "ethereum_wallet_coin_balances_" + lakeSuffix(lake)
-
-  private def lakeSuffix(lake: String): String =
-    lake.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
-
-  /** Bucket count of the wallet-transactions fact. 32 matches the local
-    * harness parallelism; at cluster scale pass the analytics/features
-    * calls a count sized so one bucket ≈ one executor-core's worth of the
-    * fact (e.g. 4096 at 100 TB). */
-  val DefaultFactBuckets = 32
-
-  /** Within-bucket sort: the incremental readers filter
+  /** The wallet-transactions fact, bucketed on wallet_address (see
+    * [[analytics]]). Within-bucket sort: the incremental readers filter
     * `block_timestamp > watermark`, so timestamp-ordered row groups give
     * them parquet min/max skipping; `priority` is the next W1 order key. */
-  val FactSortCols: Seq[String] = Seq("block_timestamp", "priority")
+  def walletTxLayout(lake: String): BucketedTable =
+    BucketedTable.rooted("ethereum_wallet_transactions_", lake, walletTxPath(lake),
+      "wallet_address", FactBuckets, Seq("block_timestamp", "priority"),
+      Seq("date_partition"))
+
+  /** The two features tables, bucketed on wallet_address like the fact
+    * they derive from, hive-partitioned by address_partition. */
+  def featuresLayout(lake: String): BucketedTable =
+    BucketedTable.rooted("ethereum_wallet_features_", lake, featuresPath(lake),
+      "wallet_address", FactBuckets, partitionCols = Seq("address_partition"))
+  def coinBalancesLayout(lake: String): BucketedTable =
+    BucketedTable.rooted("ethereum_wallet_coin_balances_", lake,
+      coinBalancesPath(lake), "wallet_address", FactBuckets,
+      partitionCols = Seq("address_partition"))
+
+  def walletTxTable(lake: String): String = walletTxLayout(lake).name
 
   private def exists(spark: SparkSession, p: String) = Lakehouse.tableExists(spark, p)
 
@@ -110,8 +106,7 @@ object DomainPipeline {
     * write time — [[features]] plans zero wallet-key exchanges
     * (DomainPipelineSpec proves it on the physical plan). */
   def analytics(spark: SparkSession, lake: String,
-      rugpulls: Option[DataFrame] = None,
-      buckets: Int = DefaultFactBuckets): Unit = {
+      rugpulls: Option[DataFrame] = None): Unit = {
     import graft.core.Schemas
     val transactions = Lakehouse.read(spark, stagePath(lake, "ethereum_transactions"))
     val traces = stageOrEmpty(spark, lake, "ethereum_traces", Schemas.traces)
@@ -134,45 +129,22 @@ object DomainPipeline {
         cut(transfers), meta, transactions, traces, contracts, rp)
       DomainTransforms.walletTransactions(normal, internal, erc20)
     }
-    Lakehouse.loadIncrementalBucketed(spark, walletTxTable(lake), walletTxPath(lake),
-      bucketKey = "wallet_address", buckets = buckets, sortCols = FactSortCols,
-      watermarkCol = "block_number", partitionCols = Seq("date_partition"),
-      keys = walletTxIdentityKeys,
+    Lakehouse.loadIncrementalBucketed(spark, walletTxLayout(lake),
+      watermarkCol = "block_number", keys = walletTxIdentityKeys,
       full = () => wtx(None),
       // the reference re-selects the boundary block (>= filter_value, :29);
       // the identity anti-join guard keeps the append duplicate-free
       incremental = wm => wtx(Some(wm.toString.toLong)))
   }
 
-  /** The wallet-transactions fact, read through its bucketed catalog entry
-    * when available (zero-exchange wallet clustering for consumers) —
-    * re-registering the layout on a fresh session — with a plain path read
-    * as the fallback for pre-bucketing lakes. */
-  def readWalletTx(spark: SparkSession, lake: String,
-      buckets: Int = DefaultFactBuckets): DataFrame = {
-    val t = walletTxTable(lake)
-    if (Lakehouse.ensureBucketedTable(spark, t, walletTxPath(lake),
-        "wallet_address", buckets, FactSortCols, Seq("date_partition")))
-      spark.table(t)
-    else Lakehouse.read(spark, walletTxPath(lake))
-  }
-
-  /** A features-layer table through its bucketed catalog entry when
-    * available (re-registering on a fresh session), plain path read as the
-    * fallback for pre-bucketing lakes. */
-  private def readFeatureTable(spark: SparkSession, table: String, path: String,
-      buckets: Int = DefaultFactBuckets): DataFrame =
-    if (Lakehouse.ensureBucketedTable(spark, table, path, "wallet_address",
-        buckets, Nil, Seq("address_partition")))
-      spark.table(table)
-    else Lakehouse.read(spark, path)
-
-  def readFeatures(spark: SparkSession, lake: String,
-      buckets: Int = DefaultFactBuckets): DataFrame =
-    readFeatureTable(spark, featuresTable(lake), featuresPath(lake), buckets)
-  def readCoinBalances(spark: SparkSession, lake: String,
-      buckets: Int = DefaultFactBuckets): DataFrame =
-    readFeatureTable(spark, coinBalancesTable(lake), coinBalancesPath(lake), buckets)
+  /** [[Lakehouse.readBucketed]] of the fact and the two features tables:
+    * zero-exchange wallet clustering for consumers. */
+  def readWalletTx(spark: SparkSession, lake: String): DataFrame =
+    Lakehouse.readBucketed(spark, walletTxLayout(lake))
+  def readFeatures(spark: SparkSession, lake: String): DataFrame =
+    Lakehouse.readBucketed(spark, featuresLayout(lake))
+  def readCoinBalances(spark: SparkSession, lake: String): DataFrame =
+    Lakehouse.readBucketed(spark, coinBalancesLayout(lake))
 
   // ----------------------------------------------------- CDC DELTA DISCOVERY
 
@@ -246,8 +218,7 @@ object DomainPipeline {
     * (DomainPipelineSpec asserts it on the executed plan); each cycle's
     * cost is the touched partitions' scan + rewrite, not a table shuffle. */
   def features(spark: SparkSession, lake: String,
-      prices: Option[DataFrame] = None,
-      buckets: Int = DefaultFactBuckets): Unit = {
+      prices: Option[DataFrame] = None): Unit = {
     // bucketed catalog read: the feature programs' wallet windows/rollups
     // run directly on the scan's wallet clustering — no exchange
     val wtx = readWalletTx(spark, lake)
@@ -264,21 +235,20 @@ object DomainPipeline {
     def touchedOf(updates: DataFrame): Seq[String] =
       updates.select("address_partition").distinct().collect().map(_.getString(0)).toSeq
 
-    val fPath = featuresPath(lake)
+    // preClustered: a rollup off the bucketed fact is wallet-clustered
+    lazy val preClustered = Lakehouse.scanBucketedOn(wtx, walletTxLayout(lake).key)
+    val fT = featuresLayout(lake)
     // the fact's file set, captured ONCE: the delta diff and the post-
     // merge ledger must describe the same snapshot of the fact
     val factFiles = factDataFiles(spark, lake)
-    if (!exists(spark, fPath)) {
+    if (!exists(spark, fT.path)) {
       // domain timestamps are epoch SECONDS — dayUnit follows.
-      // preClustered: the rollup comes off the bucketed fact wallet-clustered
       Lakehouse.ctasBucketed(WalletFeatures.walletFeatures(wtx, prices, gate, dayUnit = 86400L),
-        featuresTable(lake), "wallet_address", buckets,
-        partitionCols = Seq("address_partition"), path = Some(fPath),
-        preClustered = Lakehouse.scanBucketedOn(wtx, "wallet_address"))
+        fT, preClustered)
       lastFeatureDiscovery = Some(FeatureDiscovery("full", factFiles.toSeq.sorted))
       writeCdcLedger(spark, lake, factFiles)
     } else {
-      val stored = readFeatures(spark, lake, buckets)
+      val stored = readFeatures(spark, lake)
       val wm = stored.agg(max("wallet_last_tx")).head.getLong(0)
       // CDC-first delta: fresh fact files (file-set diff vs the ledger),
       // watermark-filtered for idempotence — row-identical to the
@@ -301,17 +271,14 @@ object DomainPipeline {
       }
       // aligned to the target's bucket layout BEFORE the cache, so the
       // merge's full-outer join plans zero exchanges (free when the rollup
-      // already ends wallet-partitioned at `buckets`; the CDC file read
+      // already ends wallet-partitioned at the bucket count; the CDC file read
       // pays one delta-sized shuffle here)
       val updates = Lakehouse.alignToBuckets(WalletFeatures
-        .incrementalUpdates(newTx, stored, prices, gate, dayUnit = 86400L),
-        "wallet_address", buckets)
+        .incrementalUpdates(newTx, stored, prices, gate, dayUnit = 86400L), fT)
         .persist()
       // :760-833 — whole-row update by wallet; mergeUpsertBucketed IS that
       // MERGE, over the wallet-bucketed target
-      Lakehouse.mergeUpsertBucketed(spark, updates, featuresTable(lake), fPath,
-        Seq("wallet_address"), "wallet_address", buckets,
-        partitionCols = Seq("address_partition"),
+      Lakehouse.mergeUpsertBucketed(spark, updates, fT, Seq("wallet_address"),
         touchedPartitions = Some(col("address_partition").isin(touchedOf(updates): _*)))
       updates.unpersist()
       // ledger LAST: a crash before this line leaves the old ledger, and
@@ -319,23 +286,18 @@ object DomainPipeline {
       writeCdcLedger(spark, lake, factFiles)
     }
 
-    val cPath = coinBalancesPath(lake)
-    if (!exists(spark, cPath)) {
-      Lakehouse.ctasBucketed(CoinBalances.fullLoad(wtx),
-        coinBalancesTable(lake), "wallet_address", buckets,
-        partitionCols = Seq("address_partition"), path = Some(cPath),
-        preClustered = Lakehouse.scanBucketedOn(wtx, "wallet_address"))
+    val cT = coinBalancesLayout(lake)
+    if (!exists(spark, cT.path)) {
+      Lakehouse.ctasBucketed(CoinBalances.fullLoad(wtx), cT, preClustered)
     } else {
-      val stored = readCoinBalances(spark, lake, buckets)
+      val stored = readCoinBalances(spark, lake)
       // the column-selective MERGE (:297-310): matched rows keep stored
       // token_symbol / has_negative_balance. The (wallet, contract) key
       // rides the wallet-only bucketing via subset co-partitioning.
       val updates = Lakehouse.alignToBuckets(
-        CoinBalances.incrementalUpdates(wtx, stored), "wallet_address", buckets)
-        .persist()
-      Lakehouse.mergeUpsertBucketed(spark, updates, coinBalancesTable(lake), cPath,
-        Seq("wallet_address", "contract_address"), "wallet_address", buckets,
-        partitionCols = Seq("address_partition"),
+        CoinBalances.incrementalUpdates(wtx, stored), cT).persist()
+      Lakehouse.mergeUpsertBucketed(spark, updates, cT,
+        Seq("wallet_address", "contract_address"),
         touchedPartitions = Some(col("address_partition").isin(touchedOf(updates): _*)),
         keepFromTarget = Set("token_symbol", "has_negative_balance"))
       updates.unpersist()
@@ -385,31 +347,18 @@ object DomainPipeline {
   }
 
   /** The reference's Sunday-only OPTIMIZE (features_pipeline.py:128-138)
-    * over the domain tables: the hive-partitioned features tables take the
-    * plain bin-pack rewrite; the bucketed wallet-tx fact takes the
-    * layout-preserving [[Lakehouse.compactBucketed]] (each incremental
-    * cycle adds one file per touched (bucket, date) — after a week that is
-    * 7 files per bucket; compaction folds them back to one). Returns
-    * whether it ran. */
-  def weeklyMaintain(spark: SparkSession, lake: String, today: java.time.LocalDate,
-      buckets: Int = DefaultFactBuckets): Boolean = {
-    if (today.getDayOfWeek != java.time.DayOfWeek.SUNDAY) return false
-    Seq(featuresTable(lake) -> featuresPath(lake),
-        coinBalancesTable(lake) -> coinBalancesPath(lake)).foreach { case (t, p) =>
-      if (Lakehouse.tableExists(spark, p)) {
-        // bucketed features lake → layout-preserving compaction; a legacy
-        // plain-layout lake still takes the bin-pack rewrite
-        if (Lakehouse.ensureBucketedTable(spark, t, p, "wallet_address", buckets,
-            Nil, Seq("address_partition")))
-          Lakehouse.compactBucketed(spark, t, p, "wallet_address", buckets,
-            Nil, Seq("address_partition"))
-        else Lakehouse.compact(spark, p, Seq("address_partition"))
-      }
+    * over the domain tables, all layout-preserving: the features tables
+    * take [[Lakehouse.compactLayout]] (a legacy plain-layout lake still
+    * gets the bin-pack rewrite); the wallet-tx fact takes
+    * [[Lakehouse.compactBucketed]] (each incremental cycle adds one file
+    * per touched (bucket, date) — after a week that is 7 files per bucket;
+    * compaction folds them back to one). Returns whether it ran. */
+  def weeklyMaintain(spark: SparkSession, lake: String,
+      today: java.time.LocalDate): Boolean =
+    today.getDayOfWeek == java.time.DayOfWeek.SUNDAY && {
+      Lakehouse.compactLayout(spark, featuresLayout(lake))
+      Lakehouse.compactLayout(spark, coinBalancesLayout(lake))
+      Lakehouse.compactBucketed(spark, walletTxLayout(lake))
+      true
     }
-    if (Lakehouse.ensureBucketedTable(spark, walletTxTable(lake), walletTxPath(lake),
-        "wallet_address", buckets, FactSortCols, Seq("date_partition")))
-      Lakehouse.compactBucketed(spark, walletTxTable(lake), walletTxPath(lake),
-        "wallet_address", buckets, FactSortCols, Seq("date_partition"))
-    true
-  }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.Lakehouse
+import graft.core.Lakehouse.{BucketedTable, FactBuckets}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,20 +52,24 @@ object Medallion {
   def featuresPath(root: String) = s"$root/features/user_features"
   def servingPath(root: String) = s"$root/serving/user_documents"
 
-  /** Catalog name of the bucketed analytics fact (per-root unique). */
-  def analyticsTable(root: String): String =
-    "user_transactions_" + rootSuffix(root)
+  /** The analytics fact, bucketed on party: the features layer windows
+    * and rolls up on the user key, so its per-run shuffle is paid once at
+    * write time (same contract as the domain pipeline's wallet-tx fact);
+    * sorted by ts_us for the watermark readers. */
+  def analyticsLayout(root: String): BucketedTable =
+    BucketedTable.rooted("user_transactions_", root, analyticsPath(root),
+      "party", FactBuckets, Seq("ts_us"), Seq("date_partition"))
 
-  /** Catalog names of the bucketed features/serving tables. */
-  def featuresTable(root: String): String = "user_features_" + rootSuffix(root)
-  def servingTable(root: String): String = "user_documents_" + rootSuffix(root)
+  /** The features and serving tables, bucketed on their user key like the
+    * fact they derive from, hive-partitioned by the 256-way user bucket. */
+  def featuresLayout(root: String): BucketedTable =
+    BucketedTable.rooted("user_features_", root, featuresPath(root),
+      "user_id", FactBuckets, partitionCols = Seq("user_partition"))
+  def servingLayout(root: String): BucketedTable =
+    BucketedTable.rooted("user_documents_", root, servingPath(root),
+      "walletAddress", FactBuckets, partitionCols = Seq("user_partition"))
 
-  private def rootSuffix(root: String): String =
-    root.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
-
-  /** Bucket count for the analytics fact — same sizing contract as
-    * [[DomainPipeline.DefaultFactBuckets]]. */
-  val FactBuckets = 32
+  def servingTable(root: String): String = servingLayout(root).name
 
   // ---------------------------------------------------------------- RAW
   /** S1 + S4: schema'd CSV scan, month partition derivation, partitioned
@@ -113,25 +118,15 @@ object Medallion {
 
   def analytics(spark: SparkSession, root: String): Unit = {
     val stageDf = Lakehouse.read(spark, stagePath(root))
-    // catalog-bucketed on party: the features layer windows and rolls up
-    // on the user key, so its per-run shuffle is paid once here at write
-    // time (same contract as the domain pipeline's wallet-tx fact)
-    Lakehouse.loadIncrementalBucketed(spark, analyticsTable(root), analyticsPath(root),
-      bucketKey = "party", buckets = FactBuckets, sortCols = Seq("ts_us"),
-      watermarkCol = "ts_us", partitionCols = Seq("date_partition"),
-      keys = Seq("event_id", "role", "date_partition"),
+    Lakehouse.loadIncrementalBucketed(spark, analyticsLayout(root),
+      watermarkCol = "ts_us", keys = Seq("event_id", "role", "date_partition"),
       full = () => pivoted(stageDf),
       incremental = wm => pivoted(stageDf.filter(col("ts_us") > lit(wm.toString.toLong))))
   }
 
-  /** The analytics fact through its bucketed catalog entry when available
-    * (re-registered on a fresh session), plain path read as the fallback
-    * for pre-bucketing lakes. */
+  /** [[Lakehouse.readBucketed]] of the analytics fact. */
   def readAnalytics(spark: SparkSession, root: String): DataFrame =
-    if (Lakehouse.ensureBucketedTable(spark, analyticsTable(root), analyticsPath(root),
-        "party", FactBuckets, Seq("ts_us"), Seq("date_partition")))
-      spark.table(analyticsTable(root))
-    else Lakehouse.read(spark, analyticsPath(root))
+    Lakehouse.readBucketed(spark, analyticsLayout(root))
 
   // ----------------------------------------------------------- FEATURES
   /** Per-user features over the actor rows. Incremental runs see ONLY the
@@ -190,14 +185,14 @@ object Medallion {
     userPartition(userId)
 
   def features(spark: SparkSession, root: String): Unit = {
-    val path = featuresPath(root)
+    val t = featuresLayout(root)
     // bucketed read: the delta window + rollup run on the scan's party
     // clustering — zero exchanges (MedallionSpec proves it on the plan)
     val actor = readAnalytics(spark, root).filter(col("role") === "actor")
 
     def delta(events: DataFrame): DataFrame = featureDelta(events)
 
-    if (!Lakehouse.tableExists(spark, path)) {
+    if (!Lakehouse.tableExists(spark, t.path)) {
       val d = delta(actor)
       // bucketed on user_id like the analytics fact it derives from: the
       // incremental stitch join AND the merge's full-outer both ride the
@@ -210,11 +205,9 @@ object Medallion {
         col("delta_balance").as("final_balance"),
         col("delta_max_run").as("max_balance"),
         userPartition(col("user_id")).as("user_partition")),
-        featuresTable(root), "user_id", FactBuckets,
-        partitionCols = Seq("user_partition"), path = Some(path),
-        preClustered = Lakehouse.scanBucketedOn(actor, "party"))
+        t, preClustered = Lakehouse.scanBucketedOn(actor, analyticsLayout(root).key))
     } else {
-      val wm = Lakehouse.read(spark, path).agg(max("last_ts_us")).head.getLong(0)
+      val wm = Lakehouse.read(spark, t.path).agg(max("last_ts_us")).head.getLong(0)
       // Persist the (small, per-user) delta aggregate: it feeds BOTH the
       // touched-partition probe and the merge write — without the cache the
       // whole delta window+agg would run twice.
@@ -230,21 +223,26 @@ object Medallion {
       val touched = d.select(userPartition(col("user_id")).as("p")).distinct()
         .collect().map(_.getString(0)).toSeq
       if (touched.nonEmpty)
-        Lakehouse.mergeUpsertBucketed(spark, merged, featuresTable(root), path,
-          Seq("user_id"), "user_id", FactBuckets,
-          partitionCols = Seq("user_partition"),
+        Lakehouse.mergeUpsertBucketed(spark, merged, t, Seq("user_id"),
           touchedPartitions = Some(col("user_partition").isin(touched: _*)))
       d.unpersist()
     }
   }
 
-  /** The features table through its bucketed catalog entry when available,
-    * plain path read for pre-bucketing lakes. */
+  /** [[Lakehouse.readBucketed]] of the features table. */
   def readFeatures(spark: SparkSession, root: String): DataFrame =
-    if (Lakehouse.ensureBucketedTable(spark, featuresTable(root), featuresPath(root),
-        "user_id", FactBuckets, Nil, Seq("user_partition")))
-      spark.table(featuresTable(root))
-    else Lakehouse.read(spark, featuresPath(root))
+    Lakehouse.readBucketed(spark, featuresLayout(root))
+
+  /** The reference's Sunday-only OPTIMIZE (features_pipeline.py:128-138)
+    * over the features table, riding the quality task. The table is
+    * bucketed, so it takes the layout-preserving
+    * [[Lakehouse.compactLayout]] (the plain bin-pack [[Lakehouse.compact]]
+    * refuses a bucketed layout). Returns whether it ran. */
+  def weeklyMaintain(spark: SparkSession, root: String,
+      today: java.time.LocalDate): Boolean =
+    today.getDayOfWeek == java.time.DayOfWeek.SUNDAY && {
+      Lakehouse.compactLayout(spark, featuresLayout(root)); true
+    }
 
   // ------------------------------------------------------------ SERVING
   /** S9/S10: the document-store export — features reshaped into one nested
@@ -278,11 +276,11 @@ object Medallion {
     // Over the BUCKETED features table the chunk boundary is the bucket:
     // the export plan is a pure scan+project — ZERO exchanges (spec-pinned)
     // — and toLocalIterator's one-sequential-job-per-partition walks the
-    // `buckets` bucket files. A legacy plain lake keeps the repartition
+    // table's bucket files. A legacy plain lake keeps the repartition
     // (NOT coalesce — coalesce narrows the whole post-shuffle stage to 4
     // tasks, serializing the upstream feature compute): one extra exchange
     // to bound the pagination at 4 partitions.
-    val paged = if (Lakehouse.scanBucketedOn(docs, "user_id")) docs
+    val paged = if (Lakehouse.scanBucketedOn(docs, featuresLayout(root).key)) docs
                 else docs.repartition(4)
     val it = paged.toLocalIterator().asScala
     val schema = docs.schema
@@ -319,9 +317,8 @@ object Medallion {
         .collect().map(_.getString(0)).toSeq
       // bucketed serving table: the inbox side (driver-built chunks) pays
       // one small shuffle; the table-sized target side joins in place
-      Lakehouse.mergeUpsertBucketed(spark, inbox, servingTable(root),
-        servingPath(root), Seq("walletAddress"), "walletAddress", FactBuckets,
-        partitionCols = Seq("user_partition"),
+      Lakehouse.mergeUpsertBucketed(spark, inbox, servingLayout(root),
+        Seq("walletAddress"),
         touchedPartitions = Some(col("user_partition").isin(touched: _*)))
       val p = new org.apache.hadoop.fs.Path(staging)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

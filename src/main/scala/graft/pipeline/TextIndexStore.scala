@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.Lakehouse
+import graft.core.Lakehouse.BucketedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,10 +55,12 @@ object TextIndexStore extends ServingStore {
 
   val Buckets = 32
 
-  private def ident(root: String): String =
-    root.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
-  def postingsTable(root: String): String = "text_postings_" + ident(root)
   def postingsPath(root: String): String = s"$root/text/postings"
+  /** The postings, bucketed and sorted on term. */
+  def postingsLayout(root: String): BucketedTable =
+    BucketedTable.rooted("text_postings_", root, postingsPath(root), "term",
+      Buckets, sortCols = Seq("term"))
+  def postingsTable(root: String): String = postingsLayout(root).name
   def statsPath(root: String): String = s"$root/text/stats"
 
   /** documents(doc_id, text) → postings rows (term, doc_id, tf, dl). */
@@ -138,8 +141,7 @@ object TextIndexStore extends ServingStore {
     * a crash in between leaves no stats, so the next call rebuilds. */
   def ensureBuilt(spark: SparkSession, root: String,
       documents: => DataFrame): Boolean = {
-    val havePostings = Lakehouse.ensureBucketedTable(spark, postingsTable(root),
-      postingsPath(root), "term", Buckets, sortCols = Seq("term"))
+    val havePostings = Lakehouse.ensureBucketedTable(spark, postingsLayout(root))
     if (havePostings && Lakehouse.tableExists(spark, statsPath(root)))
       return false
     val docs = documents.select(col("doc_id"), col("text"))
@@ -151,8 +153,7 @@ object TextIndexStore extends ServingStore {
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum("dl"), lit(0L)).as("total_len"))
       .collect().toSeq
-    Lakehouse.ctasBucketed(toPostings(docs), postingsTable(root), "term", Buckets,
-      sortCols = Seq("term"), path = Some(postingsPath(root)))
+    Lakehouse.ctasBucketed(toPostings(docs), postingsLayout(root))
     writeStats(spark, root, t.getLong(0), t.getLong(1))
     true
   }
@@ -185,8 +186,7 @@ object TextIndexStore extends ServingStore {
         .select(size(split(col("text"), " ")).cast("long").as("dl"))
         .agg(count(lit(1)).as("d_docs"), coalesce(sum("dl"), lit(0L)).as("d_len"))
         .collect().toSeq
-      Lakehouse.appendBucketed(toPostings(fresh), postingsTable(root), "term",
-        Buckets, sortCols = Seq("term"))
+      Lakehouse.appendBucketed(toPostings(fresh), postingsLayout(root))
       // the fold carries the POST-append snapshot: a crash before this line
       // leaves the old stats with a stale snapshot, which the next
       // currentStats detects and rebuilds from the postings — the batch is

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.core.{Graft, Lakehouse}
-import graft.pipeline.WalletFeatures
+import graft.pipeline.{DomainPipeline, WalletFeatures}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -61,9 +61,11 @@ object BucketBench {
       val base = java.nio.file.Files.createTempDirectory(s"bucketbench$scale").toString
       val plainPath = s"$base/plain"
       tx.write.mode("overwrite").parquet(plainPath)
+      // the production fact's bucket layout, minus its date partitions
+      val fact = DomainPipeline.walletTxLayout(base)
+        .copy(name = "bb_fact", path = s"$base/bucketed", partitionCols = Nil)
       spark.sql("DROP TABLE IF EXISTS bb_fact")
-      Lakehouse.ctasBucketed(tx, "bb_fact", "wallet_address", 32,
-        sortCols = Seq("block_timestamp", "priority"), path = Some(s"$base/bucketed"))
+      Lakehouse.ctasBucketed(tx, fact)
 
       // interleave to cancel host drift
       val reps = 3

@@ -263,12 +263,10 @@ class AnnStoreSpec extends SparkSpec {
     // simulate an appendVectors that resolved generation 0 and landed
     // AFTER refresh #1's carry pass (or a crash between publish and
     // carry): a row present ONLY in the swept-next generation's file
-    graft.core.Lakehouse.ensureBucketedTable(spark, AnnStore.assignTable(root),
-      AnnStore.assignPath(root), "cid", AnnStore.Buckets, sortCols = Seq("cid"))
+    graft.core.Lakehouse.ensureBucketedTable(spark, AnnStore.assignLayout(root))
     val stranded = spark.table(AnnStore.assignTable(root)).limit(1)
       .withColumn("vec_id", lit(999999L))
-    graft.core.Lakehouse.appendBucketed(stranded, AnnStore.assignTable(root),
-      "cid", AnnStore.Buckets, sortCols = Seq("cid"))
+    graft.core.Lakehouse.appendBucketed(stranded, AnnStore.assignLayout(root))
     assert(spark.table(AnnStore.assignTable(root, gen1))
       .filter(col("vec_id") === 999999L).isEmpty,
       "precondition: the stranded row must be absent from the live generation")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{Graft, Lakehouse}
+import graft.core.Lakehouse.BucketedTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -31,10 +32,10 @@ class BucketingSpec extends SparkSpec {
     val events = Graft.table(spark, sf, "events")
       .select(col("event_id"), col("user_id"), col("value"))
     def slice(m: Int) = events.filter(pmod(col("event_id"), lit(3)) === m)
-    Lakehouse.ctasBucketed(slice(0), "ev_compact_t", "user_id", 4,
-      sortCols = Seq("user_id"), path = Some(path))
-    Lakehouse.appendBucketed(slice(1), "ev_compact_t", "user_id", 4, Seq("user_id"))
-    Lakehouse.appendBucketed(slice(2), "ev_compact_t", "user_id", 4, Seq("user_id"))
+    val t = BucketedTable("ev_compact_t", path, "user_id", 4, sortCols = Seq("user_id"))
+    Lakehouse.ctasBucketed(slice(0), t)
+    Lakehouse.appendBucketed(slice(1), t)
+    Lakehouse.appendBucketed(slice(2), t)
     try {
       def dataFiles() = new java.io.File(path).listFiles()
         .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
@@ -46,8 +47,7 @@ class BucketingSpec extends SparkSpec {
         Lakehouse.compact(spark, path, Nil)
       }
 
-      Lakehouse.compactBucketed(spark, "ev_compact_t", path, "user_id", 4,
-        sortCols = Seq("user_id"))
+      Lakehouse.compactBucketed(spark, t)
       assert(dataFiles() == 4, "one file per bucket after compaction")
       val after = spark.table("ev_compact_t").orderBy("event_id").collect().toSeq
       assert(after == before)
@@ -63,13 +63,13 @@ class BucketingSpec extends SparkSpec {
     import spark.implicits._
     val path = tmpDir("legacy-lake") + "/t"
     val table = "legacy_upgrade_t"
+    val t = BucketedTable(table, path, "user", 4, Seq("wm"), Seq("dp"))
     def rows(wm: Long, ids: Long*) =
       ids.map(i => (i, s"u${i % 3}", wm, s"2024-0${1 + i % 2}"))
         .toDF("id", "user", "wm", "dp")
     def loadInc(batch: org.apache.spark.sql.DataFrame): Unit =
-      Lakehouse.loadIncrementalBucketed(spark, table, path,
-        bucketKey = "user", buckets = 4, sortCols = Seq("wm"),
-        watermarkCol = "wm", partitionCols = Seq("dp"), keys = Seq("id", "dp"),
+      Lakehouse.loadIncrementalBucketed(spark, t,
+        watermarkCol = "wm", keys = Seq("id", "dp"),
         full = () => batch, incremental = _ => batch)
     try {
       // a pre-bucketing lake: plain-partitioned files already on disk
@@ -83,8 +83,7 @@ class BucketingSpec extends SparkSpec {
       assert(!Lakehouse.scanBucketedOn(Lakehouse.read(spark, path), "user"))
 
       // one-time upgrade: same rows, bucketed layout, catalog-visible
-      Lakehouse.migrateToBucketed(spark, table, path, "user", 4,
-        Seq("wm"), Seq("dp"))
+      Lakehouse.migrateToBucketed(spark, t)
       assert(Lakehouse.scanBucketedOn(spark.table(table), "user"))
       assert(spark.table(table).count() == 5)
 
@@ -93,8 +92,7 @@ class BucketingSpec extends SparkSpec {
       assert(spark.table(table).count() == 7)
       assert(Lakehouse.scanBucketedOn(spark.table(table), "user"))
       // idempotent migrate: no-op once bucketed
-      Lakehouse.migrateToBucketed(spark, table, path, "user", 4,
-        Seq("wm"), Seq("dp"))
+      Lakehouse.migrateToBucketed(spark, t)
       assert(spark.table(table).count() == 7)
       // the incremental readers' watermark predicate reaches the bucketed
       // scan (the within-bucket wm sort is what makes the resulting
@@ -105,8 +103,7 @@ class BucketingSpec extends SparkSpec {
         s"watermark predicate must push to the bucketed scan:\n$planStr")
       // fresh-session re-registration recovers BOTH hive partitions (MSCK)
       spark.sql(s"DROP TABLE $table")
-      assert(Lakehouse.ensureBucketedTable(spark, table, path, "user", 4,
-        Seq("wm"), Seq("dp")))
+      assert(Lakehouse.ensureBucketedTable(spark, t))
       assert(spark.table(table).count() == 7)
       assert(spark.table(table).select("dp").distinct().count() == 2)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -115,28 +112,30 @@ class BucketingSpec extends SparkSpec {
   test("re-registration refuses a mismatched bucket count") {
     val dir = tmpDir("bucket-mismatch")
     val df = spark.range(100).selectExpr("id AS k", "id * 2 AS v")
-    Lakehouse.ctasBucketed(df, "bm_t8", "k", 8, path = Some(dir))
+    val t8 = BucketedTable("bm_t8", dir, "k", 8)
+    Lakehouse.ctasBucketed(df, t8)
     spark.sql("DROP TABLE bm_t8") // external: files + layout marker stay
     // a different bucket count would claim HashPartitioning(k, 16) over
     // mod-8 files — zero-exchange merges would then pair wrong buckets and
     // silently duplicate instead of replacing. Must refuse loudly.
     val ex = intercept[IllegalArgumentException] {
-      Lakehouse.ensureBucketedTable(spark, "bm_t16", dir, "k", 16)
+      Lakehouse.ensureBucketedTable(spark, t8.copy(name = "bm_t16", buckets = 16))
     }
     assert(ex.getMessage.contains("bucket-layout mismatch"))
     assert(!spark.catalog.tableExists("bm_t16"))
     // the true layout re-registers fine
-    assert(Lakehouse.ensureBucketedTable(spark, "bm_t8b", dir, "k", 8))
+    assert(Lakehouse.ensureBucketedTable(spark, t8.copy(name = "bm_t8b")))
     assert(spark.table("bm_t8b").count() == 100)
   }
 
   test("same-key bucketed tables join and aggregate with zero exchanges") {
     val events = Graft.table(spark, sf, "events")
       .select(col("user_id"), col("value"), col("event_type"))
-    Lakehouse.ctasBucketed(events, "ev_bucketed_a", "user_id", 4,
-      sortCols = Seq("user_id"))
+    val dir = tmpDir("bucketed-join")
+    Lakehouse.ctasBucketed(events,
+      BucketedTable("ev_bucketed_a", s"$dir/a", "user_id", 4, sortCols = Seq("user_id")))
     Lakehouse.ctasBucketed(events.filter(col("event_type") === "purchase"),
-      "ev_bucketed_b", "user_id", 4, sortCols = Seq("user_id"))
+      BucketedTable("ev_bucketed_b", s"$dir/b", "user_id", 4, sortCols = Seq("user_id")))
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -185,28 +185,27 @@ class DomainPipelineSpec extends SparkSpec {
   test("the features/coin-balances MERGE plans zero wallet-key exchanges " +
       "over the bucketed tables") {
     import graft.pipeline.{CoinBalances, RawIngestion, WalletFeatures}
-    // buckets == session shuffle partitions, mirroring the prod contract
-    // (Graft.session sets shuffle.partitions = cores = fact buckets): the
-    // update rollup then ends wallet-partitioned at the bucket count and
-    // alignToBuckets is a planner no-op.
-    val B = spark.sessionState.conf.numShufflePartitions
+    // the tables carry the production layout (Lakehouse.FactBuckets) while
+    // this session shuffles into fewer partitions: alignToBuckets is then a
+    // real delta-sized repartition, placed BEFORE the cache, and the merge
+    // plan over the cached updates must still be wallet-exchange-free.
     val lake = tmpDir("domain-lake-bmerge")
     val prices = Some(Seq(("ETH", 1.0, 1704067200L), ("0xtok", 2.0, 1704067200L))
       .toDF("address", "price", "price_ts"))
     val csv1 = tmpDir("domain-csv-bm1"); writeBatch1(csv1)
     RawIngestion.ingest(spark, csv1, lake)
     DomainPipeline.stage(spark, lake)
-    DomainPipeline.analytics(spark, lake, buckets = B)
-    DomainPipeline.features(spark, lake, prices, buckets = B)
+    DomainPipeline.analytics(spark, lake)
+    DomainPipeline.features(spark, lake, prices)
     // second batch staged through analytics; features computed by hand so
     // the merge plan is inspectable before the write executes
     val csv2 = tmpDir("domain-csv-bm2"); writeBatch2(csv2)
     RawIngestion.ingest(spark, csv2, lake)
     DomainPipeline.stage(spark, lake)
-    DomainPipeline.analytics(spark, lake, buckets = B)
+    DomainPipeline.analytics(spark, lake)
 
-    val wtx = DomainPipeline.readWalletTx(spark, lake, buckets = B)
-    val stored = DomainPipeline.readFeatures(spark, lake, buckets = B)
+    val wtx = DomainPipeline.readWalletTx(spark, lake)
+    val stored = DomainPipeline.readFeatures(spark, lake)
     assert(Lakehouse.scanBucketedOn(stored, "wallet_address"),
       "the features table must register as wallet-bucketed")
     val gate = Some(Lakehouse.read(spark,
@@ -216,12 +215,13 @@ class DomainPipelineSpec extends SparkSpec {
     val wm = stored.agg(max("wallet_last_tx")).head.getLong(0)
     val updates = Lakehouse.alignToBuckets(
       WalletFeatures.incrementalUpdates(wtx.filter(col("block_timestamp") > wm),
-        stored, prices, gate, dayUnit = 86400L), "wallet_address", B).persist()
+        stored, prices, gate, dayUnit = 86400L), DomainPipeline.featuresLayout(lake))
+      .persist()
     val touched = updates.select("address_partition").distinct()
       .collect().map(_.getString(0)).toSeq
     val mergePlan = Lakehouse.bucketedMergePlan(spark,
-      DomainPipeline.featuresTable(lake), updates, Seq("wallet_address"),
-      "wallet_address", Some(col("address_partition").isin(touched: _*)))
+      DomainPipeline.featuresLayout(lake), updates, Seq("wallet_address"),
+      Some(col("address_partition").isin(touched: _*)))
     assert(countShuffles(mergePlan, onKey = Some("wallet_address")) == 0,
       "the bucketed features MERGE must plan zero wallet exchanges:\n" +
         mergePlan.queryExecution.executedPlan)
@@ -236,15 +236,16 @@ class DomainPipelineSpec extends SparkSpec {
 
     // coin balances: the (wallet, contract) merge key rides the wallet-only
     // bucketing via subset co-partitioning
-    val cbStored = DomainPipeline.readCoinBalances(spark, lake, buckets = B)
+    val cbStored = DomainPipeline.readCoinBalances(spark, lake)
     assert(Lakehouse.scanBucketedOn(cbStored, "wallet_address"))
     val cbUpdates = Lakehouse.alignToBuckets(
-      CoinBalances.incrementalUpdates(wtx, cbStored), "wallet_address", B).persist()
+      CoinBalances.incrementalUpdates(wtx, cbStored), DomainPipeline.coinBalancesLayout(lake))
+      .persist()
     val cbTouched = cbUpdates.select("address_partition").distinct()
       .collect().map(_.getString(0)).toSeq
     val cbPlan = Lakehouse.bucketedMergePlan(spark,
-      DomainPipeline.coinBalancesTable(lake), cbUpdates,
-      Seq("wallet_address", "contract_address"), "wallet_address",
+      DomainPipeline.coinBalancesLayout(lake), cbUpdates,
+      Seq("wallet_address", "contract_address"),
       Some(col("address_partition").isin(cbTouched: _*)),
       keepFromTarget = Set("token_symbol", "has_negative_balance"))
     assert(countShuffles(cbPlan, onKey = Some("wallet_address")) == 0,
@@ -253,16 +254,41 @@ class DomainPipelineSpec extends SparkSpec {
     cbUpdates.unpersist()
 
     // the real merge: values correct AND the layout survives the swap
-    DomainPipeline.features(spark, lake, prices, buckets = B)
-    val f2 = DomainPipeline.readFeatures(spark, lake, buckets = B)
+    DomainPipeline.features(spark, lake, prices)
+    val f2 = DomainPipeline.readFeatures(spark, lake)
     assert(Lakehouse.scanBucketedOn(f2, "wallet_address"),
       "the features table must stay bucketed after the staged-swap merge")
     val b2 = f2.filter(col("wallet_address") === "0xbbbb22").head()
     assert(math.abs(b2.getAs[Double]("wallet_total_balance_eth_only") - 1.49998) < 1e-9)
-    val cb2 = DomainPipeline.readCoinBalances(spark, lake, buckets = B)
+    val cb2 = DomainPipeline.readCoinBalances(spark, lake)
     assert(Lakehouse.scanBucketedOn(cb2, "wallet_address"))
     assert(cb2.filter(col("wallet_address") === "0xbbbb22")
       .head().getAs[Long]("transactions_count") == 2)
+  }
+
+  test("a fresh catalog re-registers every bucketed domain table: cycle 2, " +
+      "the quality gate and Sunday maintenance equal a twin lake") {
+    val prices = Some(Seq(("ETH", 1.0, 1704067200L), ("0xtok", 2.0, 1704067200L))
+      .toDF("address", "price", "price_ts"))
+    val csv1 = tmpDir("domain-fresh-csv1"); writeBatch1(csv1)
+    val csv2 = tmpDir("domain-fresh-csv2"); writeBatch2(csv2)
+    val lake = tmpDir("domain-fresh"); val twin = tmpDir("domain-fresh-twin")
+    def layouts(l: String) = Seq(DomainPipeline.walletTxLayout(l),
+      DomainPipeline.featuresLayout(l), DomainPipeline.coinBalancesLayout(l))
+    Seq(lake, twin).foreach(DomainPipeline.run(spark, csv1, _, prices = prices))
+    assert(dropLakeTables(lake) == layouts(lake).map(_.name).toSet)
+    // run = ingest -> stage -> analytics -> features -> qualityGate
+    Seq(lake, twin).foreach(DomainPipeline.run(spark, csv2, _, prices = prices))
+    // and the Sunday maintenance, on an empty catalog again
+    assert(dropLakeTables(lake) == layouts(lake).map(_.name).toSet)
+    Seq(lake, twin).foreach(l => assert(DomainPipeline.weeklyMaintain(spark, l,
+      java.time.LocalDate.of(2024, 1, 7))))
+    layouts(lake).zip(layouts(twin)).foreach { case (t, w) =>
+      assert(rowStrings(Lakehouse.read(spark, t.path)) ==
+        rowStrings(Lakehouse.read(spark, w.path)), s"${t.path} differs from its twin")
+      assert(Lakehouse.scanBucketedOn(Lakehouse.readBucketed(spark, t), t.key),
+        s"${t.name} lost its bucket layout")
+    }
   }
 
   test("feature programs plan ZERO exchanges over the bucketed wallet-tx fact") {

@@ -28,6 +28,44 @@ class MainSpec extends SparkSpec {
     assert(fa.count() > 0)
   }
 
+  test("the quality layer's Sunday step compacts the bucketed features table " +
+      "through its layout (Medallion.weeklyMaintain)") {
+    def exportCsv(dir: String, cond: org.apache.spark.sql.Column): Unit =
+      graft.core.Graft.events(spark, sf).filter(cond)
+        .select("event_id", "ts_us", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
+    def dataFiles(path: String): Set[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else if (f.getName.startsWith("_") || f.getName.startsWith(".")) Nil
+        else Seq(f.getPath)
+      walk(new java.io.File(path)).toSet
+    }
+    val cut = 1704844800000000L
+    val csv1 = tmpDir("main-sun-csv1"); val csv2 = tmpDir("main-sun-csv2")
+    exportCsv(csv1, col("ts_us") <= cut); exportCsv(csv2, col("ts_us") > cut)
+    val root = tmpDir("main-sun"); val twin = tmpDir("main-sun-twin")
+    Seq(root, twin).foreach(Medallion.runCycle(spark, csv1, _))
+    val t = Medallion.featuresLayout(root)
+    // a new JVM (the CLI's) starts with an empty catalog
+    spark.sql(s"DROP TABLE ${t.name}")
+    val before = rowStrings(Lakehouse.read(spark, t.path))
+    val filesBefore = dataFiles(t.path)
+    assert(!Medallion.weeklyMaintain(spark, root, java.time.LocalDate.of(2024, 1, 6)))
+    assert(dataFiles(t.path) == filesBefore, "a Saturday must not compact")
+    assert(Medallion.weeklyMaintain(spark, root, java.time.LocalDate.of(2024, 1, 7)))
+    assert(dataFiles(t.path).intersect(filesBefore).isEmpty,
+      "the Sunday step did not rewrite the features table")
+    assert(rowStrings(Lakehouse.read(spark, t.path)) == before)
+    assert(Lakehouse.scanBucketedOn(Medallion.readFeatures(spark, root), t.key))
+    // the next incremental cycle equals the same cycle over the twin lake
+    // that was never compacted
+    Seq(root, twin).foreach(Medallion.runCycle(spark, csv2, _))
+    assert(rowStrings(Lakehouse.read(spark, t.path)) ==
+      rowStrings(Lakehouse.read(spark, Medallion.featuresPath(twin))))
+    assert(Lakehouse.scanBucketedOn(Medallion.readFeatures(spark, root), t.key))
+  }
+
   test("raw-domain layer ingests the exporter CSVs into enriched raw tables") {
     import graft.pipeline.RawIngestion
     val csv = tmpDir("raw-csv"); val lake = tmpDir("raw-lake")

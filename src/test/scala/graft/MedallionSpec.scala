@@ -155,6 +155,28 @@ class MedallionSpec extends SparkSpec {
     assert(stageN == distinctN)
   }
 
+  test("a fresh catalog re-registers every bucketed table: cycle 2 and the " +
+      "serving export equal a twin lake that kept its catalog") {
+    val cut = 1704844800000000L
+    val csv1 = tmpDir("med-fresh-csv1"); val csv2 = tmpDir("med-fresh-csv2")
+    exportCsv(csv1, col("ts_us") <= cut); exportCsv(csv2, col("ts_us") > cut)
+    val lake = tmpDir("med-fresh"); val twin = tmpDir("med-fresh-twin")
+    def cycle(csv: String)(root: String): Unit = {
+      Medallion.runCycle(spark, csv, root); Medallion.servingExport(spark, root)
+    }
+    def layouts(root: String) = Seq(Medallion.analyticsLayout(root),
+      Medallion.featuresLayout(root), Medallion.servingLayout(root))
+    Seq(lake, twin).foreach(cycle(csv1))
+    assert(dropLakeTables(lake) == layouts(lake).map(_.name).toSet)
+    Seq(lake, twin).foreach(cycle(csv2))
+    layouts(lake).zip(layouts(twin)).foreach { case (t, w) =>
+      assert(rowStrings(Lakehouse.read(spark, t.path)) ==
+        rowStrings(Lakehouse.read(spark, w.path)), s"${t.path} differs from its twin")
+      assert(Lakehouse.scanBucketedOn(Lakehouse.readBucketed(spark, t), t.key),
+        s"${t.name} lost its bucket layout")
+    }
+  }
+
   test("serving export builds one document per user with the feature map") {
     val root = tmpDir("med-serve")
     val csv = tmpDir("med-serve-csv")
@@ -210,7 +232,7 @@ class MedallionSpec extends SparkSpec {
     // against the bucketed target — zero user-key exchanges
     val updates = feats.withColumn("n_events", col("n_events") + lit(1L))
     val mergePlan = Lakehouse.bucketedMergePlan(spark,
-      Medallion.featuresTable(root), updates, Seq("user_id"), "user_id")
+      Medallion.featuresLayout(root), updates, Seq("user_id"))
     assert(countShuffles(mergePlan, onKey = Some("user_id")) == 0,
       "the bucketed features MERGE must plan zero user exchanges:\n" +
         mergePlan.queryExecution.executedPlan)

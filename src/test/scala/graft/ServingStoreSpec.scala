@@ -118,7 +118,7 @@ class ServingStoreSpec extends SparkSpec {
     DedupStore.ingestBatch(spark, healthyRoot, b1)
     // simulate the crash: batch 2's BANDS land, its shingles never do
     val (bands2, _) = DedupStore.signatures(b2)
-    graft.core.Lakehouse.appendBucketed(bands2, bandsTable(root), "bh", Buckets)
+    graft.core.Lakehouse.appendBucketed(bands2, bandsLayout(root))
     // the redelivered batch passes the shingles-keyed guard and re-runs
     // both appends
     DedupStore.appendBatch(spark, root, b2)

@@ -32,6 +32,26 @@ trait SparkSpec extends AnyFunSuite {
     walk(df.queryExecution.executedPlan)
   }
 
+  /** A frame's rows as sorted JSON strings, columns by name: an exact,
+    * order-free comparison that also covers map columns. */
+  def rowStrings(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    df.select(to_json(struct(df.columns.sorted.map(col).toSeq: _*)))
+      .collect().map(_.getString(0)).sorted.toSeq
+  }
+
+  /** Drop every catalog entry registered for `lake` (each is named with the
+    * lake root folded to an identifier as its suffix), as a fresh session
+    * would see it. The tables are external, so the files and layout markers
+    * stay. Returns the names dropped. */
+  def dropLakeTables(lake: String): Set[String] = {
+    val suffix = lake.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
+    val names = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.endsWith(suffix)).toSet
+    names.foreach(n => spark.sql(s"DROP TABLE $n"))
+    names
+  }
+
   /** Shuffle exchanges in the executed plan ([[planNodes]]); with `onKey`,
     * only hash exchanges whose partitioning references that column (the
     * "did we re-shuffle on the bucket key" probe). */

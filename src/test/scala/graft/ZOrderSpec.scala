@@ -103,7 +103,8 @@ class ZOrderSpec extends SparkSpec {
     // refuses a bucketed layout (same contract as plain compact)
     val bt = "zopt_bucketed_t"
     val bpath = tmpDir("zorder") + "/ev_bucketed"
-    Lakehouse.ctasBucketed(events.limit(100), bt, "user_id", 4, path = Some(bpath))
+    Lakehouse.ctasBucketed(events.limit(100),
+      Lakehouse.BucketedTable(bt, bpath, "user_id", 4))
     intercept[IllegalArgumentException] {
       Lakehouse.compactZOrdered(spark, bpath, "user_id", "value")
     }
