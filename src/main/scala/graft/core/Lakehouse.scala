@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Lake-table primitives: the reference's ingestion idioms re-expressed as
   * Spark writers/readers over partitioned parquet.
@@ -28,6 +29,15 @@ import org.apache.spark.sql.functions._
   *  - S11 layout-preserving compaction          -> [[compactBucketed]], [[compactLayout]]
   *  - plain-to-bucketed upgrade                 -> [[migrateToBucketed]]
   *
+  * One hashing axis: a [[BucketedTable.keyDirected]] table takes its hive
+  * directory from the key's bucket hash ([[keyDir]]), so each directory
+  * holds exactly one bucket and a write leaves at most one file per
+  * directory. The writers derive the column themselves, the MERGE derives
+  * its touched directories the same way, and the `_graft_layout` marker
+  * records the rule. A lake written under another directory rule is never
+  * registered (readers take the path read) and is rewritten once by its
+  * next writer ([[migrateToBucketed]]).
+  *
   * All tables are directories of parquet files, optionally hive-partitioned.
   * At cluster scale the same code runs unchanged: the writers shuffle by the
   * partition column so each task owns whole output partitions (no
@@ -43,11 +53,22 @@ object Lakehouse {
   /** One bucketed lake table's layout: catalog name, lake path (the table
     * is external there — the directory stays the source of truth and the
     * catalog entry is metadata over it), bucket key and count, the
-    * within-bucket sort, and the hive partition columns. Every bucketed
-    * primitive below takes this value, so each table's layout is written
-    * once where the table is declared. */
+    * within-bucket sort, and the hive partition columns; `keyDirected`
+    * when the one partition column is the key's bucket directory
+    * ([[keyDir]]). Every bucketed primitive below takes this value, so each
+    * table's layout is written once where the table is declared. */
   final case class BucketedTable(name: String, path: String, key: String,
-      buckets: Int, sortCols: Seq[String] = Nil, partitionCols: Seq[String] = Nil)
+      buckets: Int, sortCols: Seq[String] = Nil, partitionCols: Seq[String] = Nil,
+      keyDirected: Boolean = false) {
+    // the key directory is the table's only hive column, and each of the
+    // KeyDirs directories must fall inside exactly one bucket
+    require(!keyDirected || (partitionCols.size == 1 && KeyDirs % buckets == 0),
+      s"$name: a key-directed layout needs one partition column and a bucket " +
+        s"count dividing $KeyDirs (got ${partitionCols.mkString(",")}, $buckets)")
+
+    /** The key-derived directory column, when [[keyDirected]]. */
+    def keyDirCol: Option[String] = if (keyDirected) partitionCols.headOption else None
+  }
 
   object BucketedTable {
     /** A layout whose catalog name is `prefix` + the lake root folded to
@@ -58,7 +79,34 @@ object Lakehouse {
         partitionCols: Seq[String] = Nil): BucketedTable =
       BucketedTable(prefix + root.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase,
         path, key, buckets, sortCols, partitionCols)
+
+    /** A [[rooted]] layout hive-partitioned by its key's bucket directory
+      * `dirCol` ([[keyDir]]): each directory holds one bucket's file. */
+    def keyDirected(prefix: String, root: String, path: String, key: String,
+        buckets: Int, dirCol: String): BucketedTable =
+      rooted(prefix, root, path, key, buckets, partitionCols = Seq(dirCol))
+        .copy(keyDirected = true)
   }
+
+  /** Directory count of a key-directed layout: the reference's two-hex-digit
+    * `address_partition` space (ethereum_contracts.sql:16). */
+  final val KeyDirs = 256
+
+  /** The key's directory: `pmod(hash(key), 256)` in two hex digits. Spark's
+    * bucket id is `pmod(hash(key), buckets)` (the same murmur3, seed 42), so
+    * with `buckets` dividing 256 a directory's rows all share one bucket. */
+  def keyDir(key: Column): Column =
+    format_string("%02x", pmod(hash(key), lit(KeyDirs)))
+
+  /** `df` with its layout's key directory column (re)derived from the key;
+    * unchanged for a layout without one. */
+  private def withKeyDir(df: DataFrame, t: BucketedTable): DataFrame =
+    t.keyDirCol.fold(df)(d => df.withColumn(d, keyDir(col(t.key))))
+
+  /** The key directories `rows` fall in under `t`'s rule — the touched set
+    * of a MERGE of `rows` into `t`. */
+  def keyDirsOf(rows: DataFrame, t: BucketedTable): Seq[String] =
+    rows.select(keyDir(col(t.key))).distinct().collect().map(_.getString(0)).toSeq
 
   /** Bucket count of the two DAGs' bucketed facts and feature tables. 32
     * matches the local harness parallelism; the count is recorded beside
@@ -109,28 +157,27 @@ object Lakehouse {
     * min/max pruning on the sort key — e.g. the incremental readers'
     * `block_timestamp > watermark` filter skips whole row groups).
     *
-    * The df is repartitioned by (buckets, key) first — bucketBy uses the
-    * same murmur3 hash as HashPartitioning, so each write task then owns
-    * exactly one bucket and each bucket is ONE sorted file per hive
-    * partition; without it every task emits up to `buckets` files
-    * (tasks×buckets small files at scale, and a multi-file bucket forfeits
-    * the sorted-read path). The table is external at `t.path` (the lake
-    * directory layout stays the source of truth; the catalog entry is
+    * The df is aligned to the buckets first ([[alignToBuckets]]: free when
+    * its plan already ends hash-partitioned on (key, buckets), as a rollup
+    * off a same-bucketed scan does) — bucketBy uses the same murmur3 hash as
+    * HashPartitioning, so each write task then owns exactly one bucket and
+    * each bucket is ONE sorted file per hive partition, whatever
+    * `spark.sql.shuffle.partitions` is; without it every task emits up to
+    * `buckets` files (tasks×buckets small files at scale, and a multi-file
+    * bucket forfeits the sorted-read path). A key-directed layout gets its
+    * directory column derived here. The table is external at `t.path` (the
+    * lake directory layout stays the source of truth; the catalog entry is
     * metadata over it). */
-  def ctasBucketed(df: DataFrame, t: BucketedTable,
-      preClustered: Boolean = false): Unit = {
-    // preClustered: the caller guarantees df is already hash-clustered on
-    // `key` (e.g. the zero-exchange merge plan over same-bucketed inputs),
-    // so the write-time repartition would be a pure no-op shuffle. Safe
-    // unconditionally for CORRECTNESS — the writer derives each row's
-    // bucket id from the row's key value, never from the task id — a wrong
-    // claim only costs extra files per bucket.
-    val out = if (preClustered) df else df.repartition(t.buckets, col(t.key))
+  def ctasBucketed(df: DataFrame, t: BucketedTable): Unit =
+    writeBucketed(alignToBuckets(withKeyDir(df, t), t), t)
+
+  /** The bucketed CTAS of rows already laid out one bucket per task. */
+  private def writeBucketed(out: DataFrame, t: BucketedTable): Unit = {
     bucketedWriter(out, t, SaveMode.Overwrite).option("path", t.path).saveAsTable(t.name)
     // record the layout beside the data: bucket COUNT is not recoverable
     // from the files (ids only lower-bound it), and re-registering with a
     // different count silently mis-buckets every zero-exchange join
-    writeLayoutMarker(df.sparkSession, t.path, t.key, t.buckets)
+    writeLayoutMarker(out.sparkSession, t)
   }
 
   private def bucketedWriter(df: DataFrame, t: BucketedTable, mode: SaveMode) = {
@@ -146,26 +193,30 @@ object Lakehouse {
     * Underscore-prefixed so every data-file listing skips it. */
   private val LayoutMarker = "_graft_layout"
 
-  private def writeLayoutMarker(spark: SparkSession, path: String,
-      key: String, buckets: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, LayoutMarker)
+  /** The directory rule a key-directed layout records in its marker. */
+  private def dirRule(t: BucketedTable): Option[String] =
+    t.keyDirCol.map(d => s"$d=%02x(pmod(hash(${t.key}), $KeyDirs))")
+
+  private def writeLayoutMarker(spark: SparkSession, t: BucketedTable): Unit = {
+    val p = new org.apache.hadoop.fs.Path(t.path, LayoutMarker)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    try out.write(s"key=$key\nbuckets=$buckets\n".getBytes("UTF-8"))
+    val dirs = dirRule(t).fold("")(r => s"dirs=$r\n")
+    try out.write(s"key=${t.key}\nbuckets=${t.buckets}\n$dirs".getBytes("UTF-8"))
     finally out.close()
   }
 
+  /** The marker's `key=value` lines; None without a marker. */
   private def readLayoutMarker(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[(String, Int)] = {
+      dir: org.apache.hadoop.fs.Path): Option[Map[String, String]] = {
     val p = new org.apache.hadoop.fs.Path(dir, LayoutMarker)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
       val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-      val kv = s.linesIterator.map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v.trim }.toMap
-      for (k <- kv.get("key"); b <- kv.get("buckets")) yield (k, b.toInt)
+      Some(s.linesIterator.map(_.split("=", 2))
+        .collect { case Array(k, v) => k -> v.trim }.toMap)
     }
   }
 
@@ -175,16 +226,20 @@ object Lakehouse {
     * survives incremental loads. The table must already exist (create it
     * with [[ctasBucketed]] or re-register with [[ensureBucketedTable]]). */
   def appendBucketed(df: DataFrame, t: BucketedTable): Unit =
-    bucketedWriter(df.repartition(t.buckets, col(t.key)), t, SaveMode.Append)
+    bucketedWriter(alignToBuckets(withKeyDir(df, t), t), t, SaveMode.Append)
       .saveAsTable(t.name)
 
   /** Restart safety for bucketed lake tables: a fresh session (new driver,
     * new in-memory catalog — or a rebuilt metastore) re-registers the
-    * existing on-disk layout instead of rewriting it. Returns whether the
-    * table is usable (registered, data present). No-op when already
-    * registered. */
+    * existing on-disk layout instead of rewriting it. Never writes data.
+    * A key-directed layout whose marker records another directory rule (or
+    * none: a lake written before the rule was recorded) is not registered —
+    * a MERGE would be scoped to directories the stored rows are not in; its
+    * next writer upgrades it once ([[migrateToBucketed]]). Returns whether
+    * the table is registered (data present, in the requested layout). No-op
+    * when already registered. */
   def ensureBucketedTable(spark: SparkSession, t: BucketedTable): Boolean = {
-    val BucketedTable(table, path, key, buckets, sortCols, partitionCols) = t
+    val BucketedTable(table, path, key, buckets, sortCols, partitionCols, _) = t
     if (spark.catalog.tableExists(table)) return true
     if (!tableExists(spark, path)) return false
     // bucket ids live in the FILE NAMES (part-...-_00007.c000...): a lake
@@ -193,35 +248,30 @@ object Lakehouse {
     // files without a bucket-id suffix. Caller falls back to a plain read.
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!looksBucketed(fs, p)) return false
+    val files = dataFiles(fs, p)
+    if (!looksBucketed(files)) return false
     // The bucket COUNT is not recoverable from file names (ids only lower-
     // bound it), and registering INTO N BUCKETS over a layout written with
     // M != N silently mis-buckets zero-exchange joins (updates miss their
     // target rows and re-insert). The layout marker written at CTAS time is
     // authoritative; without one (pre-marker layout), a file whose bucket
     // id >= the requested count PROVES a mismatch — refuse both loudly.
-    readLayoutMarker(fs, p) match {
-      case Some((mk, mb)) =>
+    val marker = readLayoutMarker(fs, p)
+    marker match {
+      case Some(m) =>
+        val (mk, mb) = (m.getOrElse("key", ""), m.get("buckets").fold(-1)(_.toInt))
         require(mk == key && mb == buckets,
           s"bucket-layout mismatch for $table at $path: on-disk CLUSTERED BY " +
             s"($mk) INTO $mb buckets, caller requested ($key, $buckets) — " +
             "re-registering would silently corrupt bucketed merges; refusing")
       case None =>
-        val maxId = maxBucketId(fs, p)
+        val maxId = files.flatMap(f => bucketId(f.getName)).foldLeft(-1)(math.max)
         require(maxId < buckets,
           s"bucket-layout mismatch for $table at $path: file with bucket id " +
             s"$maxId exceeds the requested $buckets buckets; refusing")
     }
-    // Partition-column type inference OFF for the schema probe: the writers
-    // emit the partition values as STRINGs, so a value that round-trips as
-    // DATE/INT (a day-grain '2024-01-07', an all-digit bucket id) must not
-    // register a DATE/INT column — the next appendBucketed would fail ANSI
-    // store assignment and spark.table vs path reads would disagree.
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val saved = spark.conf.getOption(inferKey)
-    val schema =
-      try { spark.conf.set(inferKey, "false"); spark.read.parquet(path).schema }
-      finally { saved.fold(spark.conf.unset(inferKey))(spark.conf.set(inferKey, _)) }
+    if (marker.flatMap(_.get("dirs")) != dirRule(t)) return false
+    val schema = writtenSchema(spark, path)
     // partition columns must come last and be named in PARTITIONED BY
     val ordered = schema.filterNot(f => partitionCols.contains(f.name)) ++
       partitionCols.map(schema(_))
@@ -239,43 +289,55 @@ object Lakehouse {
     true
   }
 
+  /** The table's schema with every hive partition column typed STRING, as
+    * the writers emit it: with partition-column type inference on, a value
+    * that round-trips as DATE/INT (a day-grain '2024-01-07', an all-digit
+    * bucket directory) would come back as a DATE/INT column — the next
+    * appendBucketed would fail ANSI store assignment, spark.table vs path
+    * reads would disagree, and a rewrite would lose the leading zeros. */
+  private def writtenSchema(spark: SparkSession, path: String): StructType = {
+    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val saved = spark.conf.getOption(inferKey)
+    try { spark.conf.set(inferKey, "false"); spark.read.parquet(path).schema }
+    finally { saved.fold(spark.conf.unset(inferKey))(spark.conf.set(inferKey, _)) }
+  }
+
+  /** A path read under [[writtenSchema]]. */
+  private def readAsWritten(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(writtenSchema(spark, path)).parquet(path)
+
   /** A bucketed table through its catalog entry (re-registered from the
     * on-disk layout on a fresh session), so consumers get the scan's key
-    * clustering; a plain path read for a legacy pre-bucketing lake. */
+    * clustering; a path read ([[readAsWritten]]: partition values as the
+    * strings the writers emitted, like the catalog read) for a lake not in
+    * the requested layout yet — a legacy pre-bucketing lake, or one written
+    * under another directory rule. */
   def readBucketed(spark: SparkSession, t: BucketedTable): DataFrame =
-    if (ensureBucketedTable(spark, t)) spark.table(t.name) else read(spark, t.path)
+    if (ensureBucketedTable(spark, t)) spark.table(t.name) else readAsWritten(spark, t.path)
 
-  /** Every data file under `dir` (2 levels deep, hive layouts) matches
-    * Spark's bucketed-write naming (`part-NNNNN-<uuid>_BBBBB.cNNN.…`) — the
-    * on-disk signature of a bucketed write. Anchored to the full pattern,
-    * not just the `_BBBBB.` infix: a plain lake populated by a non-Spark
-    * writer whose names happen to contain `_00001.` must NOT register as
-    * bucketed (the reader would assign bogus bucket ids and bucketed joins
-    * would silently drop matches). */
-  private def dataFileNames(fs: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path, depth: Int): Seq[String] =
+  /** Every data file under `dir` (2 levels deep, hive layouts). */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      d: org.apache.hadoop.fs.Path, depth: Int = 2): Seq[org.apache.hadoop.fs.Path] =
     fs.listStatus(d).toSeq.flatMap { st =>
       val n = st.getPath.getName
-      if (st.isFile) { if (n.startsWith("_") || n.startsWith(".")) Nil else Seq(n) }
-      else if (depth > 0) dataFileNames(fs, st.getPath, depth - 1)
+      if (st.isFile) { if (n.startsWith("_") || n.startsWith(".")) Nil else Seq(st.getPath) }
+      else if (depth > 0) dataFiles(fs, st.getPath, depth - 1)
       else Nil
     }
 
-  private def looksBucketed(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Boolean = {
-    val files = dataFileNames(fs, dir, 2)
-    files.nonEmpty && files.forall(_.matches("^part-\\d+-.*_\\d{5}\\.c\\d+\\..*"))
-  }
+  /** Every data file matches Spark's bucketed-write naming
+    * (`part-NNNNN-<uuid>_BBBBB.cNNN.…`) — the on-disk signature of a
+    * bucketed write. Anchored to the full pattern, not just the `_BBBBB.`
+    * infix: a plain lake populated by a non-Spark writer whose names happen
+    * to contain `_00001.` must NOT register as bucketed (the reader would
+    * assign bogus bucket ids and bucketed joins would silently drop
+    * matches). */
+  private def looksBucketed(files: Seq[org.apache.hadoop.fs.Path]): Boolean =
+    files.nonEmpty && files.forall(_.getName.matches("^part-\\d+-.*_\\d{5}\\.c\\d+\\..*"))
 
-  /** Largest bucket id present in the on-disk file names — a LOWER bound on
-    * the layout's bucket count (only non-empty buckets leave files). */
-  private def maxBucketId(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Int = {
-    val idRe = "_(\\d{5})\\.c\\d+\\.".r
-    dataFileNames(fs, dir, 2)
-      .flatMap(n => idRe.findFirstMatchIn(n).map(_.group(1).toInt))
-      .foldLeft(-1)(math.max)
-  }
+  /** The bucket id in a bucketed-write file name. */
+  private def bucketId(name: String): Option[Int] =
+    "_(\\d{5})\\.c\\d+\\.".r.findFirstMatchIn(name).map(_.group(1).toInt)
 
   /** S11 for bucketed tables: every incremental [[appendBucketed]] adds one
     * file per touched (bucket, partition), so after K batches each bucket
@@ -283,13 +345,20 @@ object Lakehouse {
     * (bucket, partition) while PRESERVING the catalog bucket layout (the
     * plain [[compact]] would destroy it, and refuses). Registers the
     * on-disk layout first (a fresh session's catalog is empty); a no-op
-    * when the path holds no bucketed layout. Non-atomic window (same
-    * caveat as [[compact]]): readers racing the rewrite between the
-    * staging write and the saveAsTable commit see a dropped/empty table —
-    * schedule off-peak. */
+    * when the path holds no bucketed layout, and a no-op without a Spark
+    * job when every (directory, bucket) already holds one file (always
+    * true of a key-directed table written through these primitives).
+    * Non-atomic window (same caveat as [[compact]]): readers racing the
+    * rewrite between the staging write and the saveAsTable commit see a
+    * dropped/empty table — schedule off-peak. */
   def compactBucketed(spark: SparkSession, t: BucketedTable): Unit =
-    if (ensureBucketedTable(spark, t))
-      rebucketVia(spark, spark.table(t.name), t, ".compact")
+    if (ensureBucketedTable(spark, t)) {
+      val p = new org.apache.hadoop.fs.Path(t.path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val perBucket = dataFiles(fs, p).groupBy(f => (f.getParent, bucketId(f.getName)))
+      if (perBucket.values.exists(_.size > 1))
+        rebucketVia(spark, spark.table(t.name), t, ".compact")
+    }
 
   /** S11 for a table declared bucketed: the layout-preserving
     * [[compactBucketed]] when the lake holds the bucketed layout, the
@@ -297,6 +366,8 @@ object Lakehouse {
     * when the table has no data. */
   def compactLayout(spark: SparkSession, t: BucketedTable): Unit =
     if (tableExists(spark, t.path)) {
+      // a writer: a key-directed lake under another rule is upgraded first
+      if (t.keyDirected) migrateToBucketed(spark, t)
       if (ensureBucketedTable(spark, t)) compactBucketed(spark, t)
       else compact(spark, t.path, t.partitionCols)
     }
@@ -330,6 +401,9 @@ object Lakehouse {
       keys: Seq[String],
       full: () => DataFrame,
       incremental: Any => DataFrame): Unit = {
+    // a key-directed lake under another directory rule is upgraded before
+    // it is read; only a legacy plain lake takes the plain append below
+    if (t.keyDirected) migrateToBucketed(spark, t)
     val registered = ensureBucketedTable(spark, t)
     val partitionCols = t.partitionCols
     watermark(spark, t.path, watermarkCol,
@@ -355,15 +429,26 @@ object Lakehouse {
     }
   }
 
-  /** One-time upgrade of a plain-layout lake table to the bucketed layout:
-    * stages the rows out (the rewrite overwrites the files it reads) and
-    * rewrites through [[ctasBucketed]]. No-op when already bucketed or the
-    * path has no data. After this, the incremental loader appends
-    * bucket-aligned files and consumers get the zero-exchange reads. */
+  /** One-time upgrade of a lake table to its requested layout — a legacy
+    * plain-layout lake, or a key-directed table written under another
+    * directory rule: stages the rows out (the rewrite overwrites the files
+    * it reads) and rewrites through [[ctasBucketed]], which recomputes the
+    * key directories. No-op when already in the layout or the path has no
+    * data. After this, the incremental loader appends bucket-aligned files
+    * and consumers get the zero-exchange reads. */
   def migrateToBucketed(spark: SparkSession, t: BucketedTable): Unit =
-    // already bucketed (and now registered), or no data: nothing to do
-    if (!ensureBucketedTable(spark, t) && tableExists(spark, t.path))
-      rebucketVia(spark, read(spark, t.path), t, ".migrate")
+    migrateVia(spark, t)(identity)
+
+  /** [[migrateToBucketed]] of the stored rows passed through `f`; returns
+    * whether the table was rewritten. */
+  private def migrateVia(spark: SparkSession, t: BucketedTable)(
+      f: DataFrame => DataFrame): Boolean = {
+    // already in the layout (and now registered), or no data: nothing to do
+    val upgrade = !ensureBucketedTable(spark, t) && tableExists(spark, t.path)
+    if (upgrade)
+      rebucketVia(spark, f(withKeyDir(readAsWritten(spark, t.path), t)), t, ".migrate")
+    upgrade
+  }
 
   /** True when the file scans feeding `df` deliver the `key` clustering —
     * at least one scan is catalog-bucketed on exactly (`key`), and every
@@ -390,13 +475,16 @@ object Lakehouse {
   def clusterBy(df: DataFrame, key: String): DataFrame =
     if (scanBucketedOn(df, key)) df else df.repartition(col(key))
 
-  /** Align a MERGE's updates frame to the target's bucket layout
-    * (HashPartitioning(key, buckets)) so the merge's full-outer join plans
-    * zero exchanges. Free when the updates plan already ends key-partitioned
-    * at `buckets` (EnsureRequirements removes a REPARTITION_BY_NUM shuffle
-    * whose child partitioning already equals it); otherwise it relocates
-    * the ONE delta-sized shuffle the merge join would insert anyway to
-    * BEFORE the caller's cache, leaving the merge plan exchange-free. */
+  /** Align a frame to the target's bucket layout
+    * (HashPartitioning(key, buckets)): one bucket per task. Every bucketed
+    * write and MERGE applies it — a write task then owns whole buckets (one
+    * file per (directory, bucket), whatever the shuffle-partition count),
+    * and the merge's full-outer join plans zero exchanges. Free when the
+    * plan already ends key-partitioned at `buckets` (EnsureRequirements
+    * removes a REPARTITION_BY_NUM shuffle whose child partitioning already
+    * equals it); otherwise it is the ONE delta-sized shuffle the write or
+    * merge join would need anyway — a caller that caches its updates aligns
+    * them BEFORE the cache, leaving the merge plan exchange-free. */
   def alignToBuckets(df: DataFrame, t: BucketedTable): DataFrame =
     df.repartition(t.buckets, col(t.key))
 
@@ -602,52 +690,52 @@ object Lakehouse {
     * the semantics but its full-outer join re-shuffles the target on the
     * merge key EVERY incremental cycle. Here the target is read through its
     * bucketed catalog entry, so the scan itself delivers
-    * HashPartitioning(key, buckets): with bucket-aligned updates
-    * (derived from a same-bucketed fact) the full-outer join plans ZERO
-    * bucket-key exchanges, and the staged rewrite is written preClustered —
-    * the per-cycle merge cost drops from O(table shuffle) to O(touched
-    * partitions scan + write). Joins whose key set extends the bucket key
-    * (coin balances: wallet + contract) still qualify via subset
+    * HashPartitioning(key, buckets): the updates are aligned to the same
+    * partitioning ([[alignToBuckets]] — free when derived from a
+    * same-bucketed fact) and the full-outer join plans ZERO bucket-key
+    * exchanges, one bucket per task, so the staged rewrite needs no shuffle
+    * either — the per-cycle merge cost drops from O(table shuffle) to
+    * O(touched directories scan + write). Joins whose key set extends the
+    * bucket key (coin balances: wallet + contract) still qualify via subset
     * co-partitioning (`spark.sql.requireAllClusterKeysForCoPartition=false`
     * — set in [[Graft.session]]).
     *
-    * The bucket key must be one of `keys` and non-null by construction (it is compared with `=`,
-    * see [[mergeFrames]] `eqKeys`). Falls back to the path-based merge on a
-    * LEGACY plain-layout lake (same contract as [[loadIncrementalBucketed]]:
-    * never a corrupting half-bucketed write — upgrade once via
-    * [[migrateToBucketed]]). MSCK after the swap registers any NEW hive
-    * partitions the merge created; its listing is O(partition dirs), which
-    * the address-partition scheme bounds at 256. */
+    * On a key-directed layout the merge is directory-scoped: the touched
+    * directories are the updates' own ([[keyDirsOf]]), only they are read
+    * and rewritten, and every other directory stays untouched on disk. An
+    * empty update set writes nothing. Without a key directory the whole
+    * table is rewritten.
+    *
+    * The bucket key must be one of `keys` and non-null by construction (it
+    * is compared with `=`, see [[mergeFrames]] `eqKeys`). A table not in
+    * the layout yet (a LEGACY plain-layout lake, or a key-directed table
+    * under another directory rule) takes this merge as its one-time
+    * [[migrateToBucketed]] upgrade: one whole-table rewrite of the merged
+    * rows, never a corrupting half-bucketed write. MSCK after the swap registers
+    * any NEW hive partitions the merge created; its listing is O(partition
+    * dirs), which the key-directory scheme bounds at 256. */
   def mergeUpsertBucketed(
       spark: SparkSession,
       updates: DataFrame,
       t: BucketedTable,
       keys: Seq[String],
-      touchedPartitions: Option[Column] = None,
       keepFromTarget: Set[String] = Set.empty): Unit = {
     require(keys.contains(t.key),
       s"bucket key ${t.key} must be part of the merge keys ${keys.mkString(",")}")
-    // same contract as mergeUpsert: the partition-scoped commit moves
-    // directories, so it is meaningless without partition columns
-    require(touchedPartitions.isEmpty || t.partitionCols.nonEmpty,
-      "touchedPartitions requires partitionCols: an unpartitioned staging " +
-        "dir has no partition directories to move and the merge would be lost")
-    if (!tableExists(spark, t.path)) {
-      ctasBucketed(updates, t, preClustered = true)
+    if (!tableExists(spark, t.path)) { ctasBucketed(updates, t); return }
+    // the merge rides the upgrade's staging write, which runs before the
+    // table files are replaced — `updates` may be read from them
+    if (migrateVia(spark, t)(mergeFrames(_, withKeyDir(updates, t), keys, keepFromTarget)))
       return
-    }
-    if (!ensureBucketedTable(spark, t)) {
-      mergeUpsert(spark, updates, t.path, keys, t.partitionCols, touchedPartitions,
-        keepFromTarget)
-      return
-    }
-    val merged = bucketedMergePlan(spark, t, updates, keys, touchedPartitions,
-      keepFromTarget)
+    val touched = t.keyDirCol.map(_ => keyDirsOf(updates, t))
+    if (touched.exists(_.isEmpty)) return
+    val merged = mergePlan(spark, t, updates, keys, touched, keepFromTarget)
 
     // Staged swap, same as mergeUpsert (the merged plan reads the files the
     // swap replaces) — but staged through a BUCKETED write so the layout
-    // survives the merge. preClustered: merged comes off the co-partitioned
-    // full-outer join, already clustered on the bucket key.
+    // survives the merge. No write-time shuffle: merged comes off the
+    // co-partitioned full-outer join, one bucket per task (the planner
+    // cannot see it — a full-outer join reports no output partitioning).
     val staging = t.copy(name = t.name + "_staging",
       path = t.path.stripSuffix("/") + ".staging")
     spark.sql(s"DROP TABLE IF EXISTS ${staging.name}")
@@ -655,25 +743,32 @@ object Lakehouse {
     // a stale staging dir (crashed previous merge) would fail the CTAS —
     // CREATE TABLE AS SELECT refuses a non-empty location
     sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-    ctasBucketed(merged, staging, preClustered = true)
+    writeBucketed(merged, staging)
     spark.sql(s"DROP TABLE ${staging.name}") // external: the staged files stay
-    swapIn(spark, staging.path, t.path, wholeTable = touchedPartitions.isEmpty)
+    swapIn(spark, staging.path, t.path, wholeTable = touched.isEmpty)
     spark.catalog.refreshTable(t.name)
     if (t.partitionCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE ${t.name}")
   }
 
   /** The bucketed merge's read plan ([[mergeUpsertBucketed]] minus the
-    * write) — exposed so specs can assert its physical shape (zero
-    * bucket-key exchanges) on the exact plan the merge executes. */
+    * write, over a registered table) — exposed so specs can assert its
+    * physical shape (zero bucket-key exchanges) on the exact plan the merge
+    * executes. */
   def bucketedMergePlan(spark: SparkSession, t: BucketedTable, updates: DataFrame,
-      keys: Seq[String], touchedPartitions: Option[Column] = None,
-      keepFromTarget: Set[String] = Set.empty): DataFrame = {
+      keys: Seq[String], keepFromTarget: Set[String] = Set.empty): DataFrame =
+    mergePlan(spark, t, updates, keys,
+      t.keyDirCol.map(_ => keyDirsOf(updates, t)), keepFromTarget)
+
+  private def mergePlan(spark: SparkSession, t: BucketedTable, updates: DataFrame,
+      keys: Seq[String], touched: Option[Seq[String]],
+      keepFromTarget: Set[String]): DataFrame = {
     val target = spark.table(t.name)
+    val u = alignToBuckets(withKeyDir(updates, t), t)
     val cols = target.columns.toSeq
-    require(updates.columns.toSeq.sorted == cols.sorted,
-      s"merge schema mismatch: ${updates.columns.mkString(",")} vs ${cols.mkString(",")}")
-    val scoped = touchedPartitions.fold(target)(target.filter)
-    mergeFrames(scoped, updates, keys, keepFromTarget, eqKeys = Set(t.key))
+    require(u.columns.toSeq.sorted == cols.sorted,
+      s"merge schema mismatch: ${u.columns.mkString(",")} vs ${cols.mkString(",")}")
+    val scoped = touched.fold(target)(ds => target.filter(col(t.partitionCols.head).isin(ds: _*)))
+    mergeFrames(scoped, u, keys, keepFromTarget, eqKeys = Set(t.key))
   }
 
   /** The MERGE semantics as a pure DataFrame transform (shared by
@@ -798,7 +893,7 @@ object Lakehouse {
     // bucket ids live in the file names, so the catalog entry would point
     // at files the bucketed reader rejects. Refuse loudly; the bucketed
     // table's compaction is [[compactBucketed]].
-    require(!looksBucketed(fs, hp),
+    require(!looksBucketed(dataFiles(fs, hp)),
       s"$path holds a bucketed layout - use compactBucketed (a plain " +
         "rewrite drops the bucket-id file names the catalog relies on)")
     val bytes = fs.getContentSummary(hp).getLength
@@ -983,7 +1078,7 @@ object Lakehouse {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) return
-    require(!looksBucketed(fs, hp),
+    require(!looksBucketed(dataFiles(fs, hp)),
       s"$path holds a bucketed layout - z-order compaction would drop the " +
         "bucket-id file names the catalog relies on")
     val bytes = fs.getContentSummary(hp).getLength

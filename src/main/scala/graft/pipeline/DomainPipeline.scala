@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * contracts table = no contract flags, exactly like a fresh lake).
   *
   * Scale: every layer writes date-partitioned parquet; the features MERGE
-  * rewrites only the touched address partitions through a staged swap —
-  * [[Lakehouse.mergeUpsert]] carries both MERGE flavors (whole-row for
+  * rewrites only the touched wallet directories through a staged swap —
+  * [[Lakehouse.mergeUpsertBucketed]] carries both MERGE flavors (whole-row for
   * wallet features; column-selective keepFromTarget for coin balances).
   */
 object DomainPipeline {
@@ -42,14 +42,15 @@ object DomainPipeline {
       Seq("date_partition"))
 
   /** The two features tables, bucketed on wallet_address like the fact
-    * they derive from, hive-partitioned by address_partition. */
+    * they derive from, hive-partitioned by the wallet's bucket directory
+    * `wallet_partition` (one bucket per directory). The reference's
+    * `address_partition` (substr(address, 3, 2)) stays a data column. */
   def featuresLayout(lake: String): BucketedTable =
-    BucketedTable.rooted("ethereum_wallet_features_", lake, featuresPath(lake),
-      "wallet_address", FactBuckets, partitionCols = Seq("address_partition"))
+    BucketedTable.keyDirected("ethereum_wallet_features_", lake, featuresPath(lake),
+      "wallet_address", FactBuckets, "wallet_partition")
   def coinBalancesLayout(lake: String): BucketedTable =
-    BucketedTable.rooted("ethereum_wallet_coin_balances_", lake,
-      coinBalancesPath(lake), "wallet_address", FactBuckets,
-      partitionCols = Seq("address_partition"))
+    BucketedTable.keyDirected("ethereum_wallet_coin_balances_", lake,
+      coinBalancesPath(lake), "wallet_address", FactBuckets, "wallet_partition")
 
   def walletTxTable(lake: String): String = walletTxLayout(lake).name
 
@@ -229,22 +230,16 @@ object DomainPipeline {
           .select(col("contract_address").as("contract_address_metadata")).distinct())
       else None
 
-    // the hex address_partition space is <= 256 values — deriving the
-    // touched set from the (persisted, small) updates keeps both MERGEs
-    // O(touched partitions), never O(table)
-    def touchedOf(updates: DataFrame): Seq[String] =
-      updates.select("address_partition").distinct().collect().map(_.getString(0)).toSeq
-
-    // preClustered: a rollup off the bucketed fact is wallet-clustered
-    lazy val preClustered = Lakehouse.scanBucketedOn(wtx, walletTxLayout(lake).key)
     val fT = featuresLayout(lake)
     // the fact's file set, captured ONCE: the delta diff and the post-
     // merge ledger must describe the same snapshot of the fact
     val factFiles = factDataFiles(spark, lake)
     if (!exists(spark, fT.path)) {
       // domain timestamps are epoch SECONDS — dayUnit follows.
+      // a rollup off the bucketed fact is wallet-clustered: the write's
+      // bucket alignment costs no shuffle
       Lakehouse.ctasBucketed(WalletFeatures.walletFeatures(wtx, prices, gate, dayUnit = 86400L),
-        fT, preClustered)
+        fT)
       lastFeatureDiscovery = Some(FeatureDiscovery("full", factFiles.toSeq.sorted))
       writeCdcLedger(spark, lake, factFiles)
     } else {
@@ -277,9 +272,9 @@ object DomainPipeline {
         .incrementalUpdates(newTx, stored, prices, gate, dayUnit = 86400L), fT)
         .persist()
       // :760-833 — whole-row update by wallet; mergeUpsertBucketed IS that
-      // MERGE, over the wallet-bucketed target
-      Lakehouse.mergeUpsertBucketed(spark, updates, fT, Seq("wallet_address"),
-        touchedPartitions = Some(col("address_partition").isin(touchedOf(updates): _*)))
+      // MERGE, over the wallet-bucketed target, scoped to the directories
+      // the (persisted, small) updates touch: O(delta), never O(table)
+      Lakehouse.mergeUpsertBucketed(spark, updates, fT, Seq("wallet_address"))
       updates.unpersist()
       // ledger LAST: a crash before this line leaves the old ledger, and
       // the replayed delta filters to empty rows behind the watermark
@@ -288,7 +283,7 @@ object DomainPipeline {
 
     val cT = coinBalancesLayout(lake)
     if (!exists(spark, cT.path)) {
-      Lakehouse.ctasBucketed(CoinBalances.fullLoad(wtx), cT, preClustered)
+      Lakehouse.ctasBucketed(CoinBalances.fullLoad(wtx), cT)
     } else {
       val stored = readCoinBalances(spark, lake)
       // the column-selective MERGE (:297-310): matched rows keep stored
@@ -298,7 +293,6 @@ object DomainPipeline {
         CoinBalances.incrementalUpdates(wtx, stored), cT).persist()
       Lakehouse.mergeUpsertBucketed(spark, updates, cT,
         Seq("wallet_address", "contract_address"),
-        touchedPartitions = Some(col("address_partition").isin(touchedOf(updates): _*)),
         keepFromTarget = Set("token_symbol", "has_negative_balance"))
       updates.unpersist()
     }

@@ -38,14 +38,6 @@ object Medallion {
 
   private def monthCol = date_format(timestamp_micros(col("ts_us")), "yyyy-MM")
 
-  /** 256-bucket layout key for the features/serving tables — the engine's
-    * analogue of the reference's `address_partition = substr(address, 3, 2)`
-    * (ethereum_contracts.sql:16; chunking features_pipeline.py:97-104). An
-    * incremental merge rewrites only the buckets its delta touches, keeping
-    * the merge O(delta), not O(table), at 100 TB. */
-  private def userPartition(userId: org.apache.spark.sql.Column) =
-    format_string("%02x", pmod(userId, lit(256)))
-
   def rawPath(root: String) = s"$root/raw/events"
   def stagePath(root: String) = s"$root/stage/events"
   def analyticsPath(root: String) = s"$root/analytics/user_transactions"
@@ -61,13 +53,20 @@ object Medallion {
       "party", FactBuckets, Seq("ts_us"), Seq("date_partition"))
 
   /** The features and serving tables, bucketed on their user key like the
-    * fact they derive from, hive-partitioned by the 256-way user bucket. */
+    * fact they derive from, hive-partitioned by that key's 256-way bucket
+    * directory `user_partition` ([[Lakehouse.keyDir]], one bucket per
+    * directory): `user_id`'s for the features, `walletAddress`'s for the
+    * serving documents — the engine's analogue of the reference's
+    * `address_partition = substr(address, 3, 2)` (ethereum_contracts.sql:16;
+    * chunking features_pipeline.py:97-104). An incremental merge rewrites
+    * only the directories its delta touches, keeping the merge O(delta),
+    * not O(table), at 100 TB. */
   def featuresLayout(root: String): BucketedTable =
-    BucketedTable.rooted("user_features_", root, featuresPath(root),
-      "user_id", FactBuckets, partitionCols = Seq("user_partition"))
+    BucketedTable.keyDirected("user_features_", root, featuresPath(root),
+      "user_id", FactBuckets, "user_partition")
   def servingLayout(root: String): BucketedTable =
-    BucketedTable.rooted("user_documents_", root, servingPath(root),
-      "walletAddress", FactBuckets, partitionCols = Seq("user_partition"))
+    BucketedTable.keyDirected("user_documents_", root, servingPath(root),
+      "walletAddress", FactBuckets, "user_partition")
 
   def servingTable(root: String): String = servingLayout(root).name
 
@@ -177,55 +176,39 @@ object Medallion {
         greatest(
           coalesce(col("o.max_balance"), lit(Double.MinValue)),
           coalesce(col("o.final_balance"), lit(0.0)) + col("d.delta_max_run"))
-          .as("max_balance"),
-        userPartition(col("d.user_id")).as("user_partition"))
-
-  /** The features bucket key for a user id — shared with [[MedallionCdc]]. */
-  private[pipeline] def userPartitionOf(userId: org.apache.spark.sql.Column) =
-    userPartition(userId)
+          .as("max_balance"))
 
   def features(spark: SparkSession, root: String): Unit = {
     val t = featuresLayout(root)
     // bucketed read: the delta window + rollup run on the scan's party
     // clustering — zero exchanges (MedallionSpec proves it on the plan)
     val actor = readAnalytics(spark, root).filter(col("role") === "actor")
-
-    def delta(events: DataFrame): DataFrame = featureDelta(events)
-
     if (!Lakehouse.tableExists(spark, t.path)) {
-      val d = delta(actor)
       // bucketed on user_id like the analytics fact it derives from: the
       // incremental stitch join AND the merge's full-outer both ride the
-      // layout (zero user-key exchanges, MedallionSpec pins the plan).
-      // preClustered: the delta rollup comes off the bucketed fact already
-      // user-clustered (alias-aware partitioning through party→user_id).
-      Lakehouse.ctasBucketed(d.select(
+      // layout (zero user-key exchanges, MedallionSpec pins the plan). The
+      // delta rollup comes off the bucketed fact already user-clustered
+      // (alias-aware partitioning through party→user_id), so the write's
+      // bucket alignment costs no shuffle.
+      Lakehouse.ctasBucketed(featureDelta(actor).select(
         col("user_id"), col("n_events"), col("total_purchase_value"),
         col("first_ts_us"), col("last_ts_us"),
         col("delta_balance").as("final_balance"),
-        col("delta_max_run").as("max_balance"),
-        userPartition(col("user_id")).as("user_partition")),
-        t, preClustered = Lakehouse.scanBucketedOn(actor, analyticsLayout(root).key))
+        col("delta_max_run").as("max_balance")), t)
     } else {
       val wm = Lakehouse.read(spark, t.path).agg(max("last_ts_us")).head.getLong(0)
-      // Persist the (small, per-user) delta aggregate: it feeds BOTH the
-      // touched-partition probe and the merge write — without the cache the
-      // whole delta window+agg would run twice.
-      val d = delta(actor.filter(col("ts_us") > lit(wm))).persist()
-      val old = readFeatures(spark, root)
+      val d = featureDelta(actor.filter(col("ts_us") > lit(wm)))
       // A7 state merge with W10 boundary stitch, touched users only.
-      val merged = stitchFeatures(d, old)
-      // O(delta) merge: only the 256-bucket partitions the delta touches are
-      // joined against and rewritten; every other partition dir is untouched
-      // on disk (MedallionSpec asserts byte-identity). `touched` comes from
-      // the DELTA alone — merged's partitions are a function of d.user_id —
-      // so the probe never pays for the join against the stored state.
-      val touched = d.select(userPartition(col("user_id")).as("p")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      if (touched.nonEmpty)
-        Lakehouse.mergeUpsertBucketed(spark, merged, t, Seq("user_id"),
-          touchedPartitions = Some(col("user_partition").isin(touched: _*)))
-      d.unpersist()
+      // Persisted: the stitched rows feed BOTH the merge's touched-directory
+      // probe and its write — without the cache the delta window+agg and
+      // the stitch join would run twice. O(delta) merge: only the
+      // directories the delta touches are joined against and rewritten;
+      // every other directory is untouched on disk (MedallionSpec asserts
+      // byte-identity).
+      val merged = Lakehouse.alignToBuckets(
+        stitchFeatures(d, readFeatures(spark, root)), t).persist()
+      try Lakehouse.mergeUpsertBucketed(spark, merged, t, Seq("user_id"))
+      finally merged.unpersist()
     }
   }
 
@@ -249,8 +232,10 @@ object Medallion {
     * document per user (walletAddress rename + A3 metric map), streamed in
     * driver-side chunks via toLocalIterator (the reference's paginated
     * Athena read), upserted into the serving table. */
-  /** The document reshape (A3 metric map + walletAddress rename) — exposed
-    * so specs can assert the export plan's physical shape. */
+  /** The document reshape (A3 metric map + walletAddress rename, and the
+    * document's serving directory `user_partition`: its walletAddress's
+    * bucket directory) — exposed so specs can assert the export plan's
+    * physical shape. */
   def servingDocs(feats: DataFrame): DataFrame =
     feats.select(
       col("user_id").cast("string").as("walletAddress"),
@@ -259,8 +244,8 @@ object Medallion {
         lit("total_purchase_value"), col("total_purchase_value"),
         lit("final_balance"), col("final_balance"),
         lit("max_balance"), col("max_balance")).as("features"),
-      col("last_ts_us"),
-      col("user_partition"))
+      col("last_ts_us"))
+      .withColumn("user_partition", Lakehouse.keyDir(col("walletAddress")))
 
   def servingExport(spark: SparkSession, root: String, chunkRows: Int = 1000): Unit = {
     val feats = readFeatures(spark, root)
@@ -307,19 +292,16 @@ object Medallion {
       val inbox = inboxRaw
         .withColumn("_inbox_rank", row_number().over(wDedup))
         .filter(col("_inbox_rank") === 1).drop("_inbox_rank")
-      // touched partitions MUST come from the inbox table, not the rows
-      // streamed this run: a previous run that crashed between append and
-      // cleanup leaves its chunks in the inbox, and scoping the merge to
-      // only this run's partitions would stage those orphan partitions
-      // WITHOUT their existing serving rows — the partition-dir swap would
-      // then drop them. The inbox is staging-sized, so the probe is cheap.
-      val touched = inbox.select("user_partition").distinct()
-        .collect().map(_.getString(0)).toSeq
-      // bucketed serving table: the inbox side (driver-built chunks) pays
-      // one small shuffle; the table-sized target side joins in place
+      // the merge's touched directories come from `inbox` — the whole
+      // deduped inbox table, not the rows streamed this run: a previous run
+      // that crashed between append and cleanup leaves its chunks in the
+      // inbox, and scoping the merge to only this run's directories would
+      // stage those orphan directories WITHOUT their existing serving rows
+      // — the directory swap would then drop them. The bucketed serving
+      // table: the inbox side (driver-built chunks) pays one small shuffle;
+      // the table-sized target side joins in place.
       Lakehouse.mergeUpsertBucketed(spark, inbox, servingLayout(root),
-        Seq("walletAddress"),
-        touchedPartitions = Some(col("user_partition").isin(touched: _*)))
+        Seq("walletAddress"))
       val p = new org.apache.hadoop.fs.Path(staging)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.core.ManifestSnapshots
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The medallion FEATURES layer driven by manifest-snapshot CDC — the
@@ -122,13 +122,22 @@ object MedallionCdc {
   def serveFeatures(spark: SparkSession, root: String): DataFrame =
     ManifestSnapshots.readLatest(spark, featuresDir(root)).drop("base_version")
 
+  /** The feature store's 256-way user directory, `user_id mod 256` in two
+    * hex digits — the rule every committed store is written under. A
+    * refresh reads back only the directories of the delta's users, so a
+    * changed rule would miss a user's stored row and commit a second one.
+    * The store is not bucketed: [[Medallion]]'s bucket directory buys it
+    * nothing. */
+  private def userPartition(userId: Column): Column =
+    format_string("%02x", pmod(userId, lit(256)))
+
   private def featureImage(d: DataFrame): DataFrame =
     d.select(
       col("user_id"), col("n_events"), col("total_purchase_value"),
       col("first_ts_us"), col("last_ts_us"),
       col("delta_balance").as("final_balance"),
       col("delta_max_run").as("max_balance"),
-      Medallion.userPartitionOf(col("user_id")).as("user_partition"))
+      userPartition(col("user_id")).as("user_partition"))
 
   /** Bring the feature state up to the analytics chain's committed
     * version. Incremental (CDC delta files only) when state exists and
@@ -166,7 +175,7 @@ object MedallionCdc {
           if (d.isEmpty) CdcRefreshStats("noop", curV, added.size.toLong, 0L)
           else {
             val touched = d
-              .select(Medallion.userPartitionOf(col("user_id")).as("p"))
+              .select(userPartition(col("user_id")).as("p"))
               .distinct().collect().map(_.getString(0)).toSeq
             // partition image = stitched delta users + carried old users
             // of the SAME buckets (partition pruning bounds the old read)
@@ -188,6 +197,7 @@ object MedallionCdc {
             if (late) fullRestate()
             else {
               val stitched = Medallion.stitchFeatures(d, oldTouched)
+                .withColumn("user_partition", userPartition(col("user_id")))
               val carried = oldTouched
                 .join(d.select("user_id"), Seq("user_id"), "left_anti")
               val image = stitched.unionByName(carried)

@@ -213,22 +213,20 @@ class DomainPipelineSpec extends SparkSpec {
       .filter(col("decimals") > 0)
       .select(col("contract_address").as("contract_address_metadata")).distinct())
     val wm = stored.agg(max("wallet_last_tx")).head.getLong(0)
+    val fT = DomainPipeline.featuresLayout(lake)
     val updates = Lakehouse.alignToBuckets(
       WalletFeatures.incrementalUpdates(wtx.filter(col("block_timestamp") > wm),
-        stored, prices, gate, dayUnit = 86400L), DomainPipeline.featuresLayout(lake))
+        stored, prices, gate, dayUnit = 86400L), fT)
       .persist()
-    val touched = updates.select("address_partition").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val mergePlan = Lakehouse.bucketedMergePlan(spark,
-      DomainPipeline.featuresLayout(lake), updates, Seq("wallet_address"),
-      Some(col("address_partition").isin(touched: _*)))
+    val touched = Lakehouse.keyDirsOf(updates, fT)
+    val mergePlan = Lakehouse.bucketedMergePlan(spark, fT, updates, Seq("wallet_address"))
     assert(countShuffles(mergePlan, onKey = Some("wallet_address")) == 0,
       "the bucketed features MERGE must plan zero wallet exchanges:\n" +
         mergePlan.queryExecution.executedPlan)
     // control: the path-based merge re-shuffles the target every cycle
     val plainPlan = Lakehouse.mergeFrames(
       Lakehouse.read(spark, DomainPipeline.featuresPath(lake))
-        .filter(col("address_partition").isin(touched: _*)),
+        .filter(col(fT.partitionCols.head).isin(touched: _*)).drop(fT.partitionCols: _*),
       updates, Seq("wallet_address"))
     assert(countShuffles(plainPlan, onKey = Some("wallet_address")) > 0,
       "control: the path-based merge must shuffle on the wallet key")
@@ -241,12 +239,9 @@ class DomainPipelineSpec extends SparkSpec {
     val cbUpdates = Lakehouse.alignToBuckets(
       CoinBalances.incrementalUpdates(wtx, cbStored), DomainPipeline.coinBalancesLayout(lake))
       .persist()
-    val cbTouched = cbUpdates.select("address_partition").distinct()
-      .collect().map(_.getString(0)).toSeq
     val cbPlan = Lakehouse.bucketedMergePlan(spark,
       DomainPipeline.coinBalancesLayout(lake), cbUpdates,
       Seq("wallet_address", "contract_address"),
-      Some(col("address_partition").isin(cbTouched: _*)),
       keepFromTarget = Set("token_symbol", "has_negative_balance"))
     assert(countShuffles(cbPlan, onKey = Some("wallet_address")) == 0,
       "the bucketed coin-balances MERGE must plan zero wallet exchanges:\n" +

@@ -96,6 +96,29 @@ class MedallionCdcSpec extends SparkSpec {
       MedallionCdc.serveFeatures(spark, root2))
   }
 
+  test("a store committed under user_id mod 256 takes an incremental refresh " +
+      "without committing a user twice") {
+    val root = tmpDir("mcdcrule")
+    MedallionCdc.runCycle(spark, root, stageBatch(0, 300))
+    // restate the store exactly as every earlier build laid it out: one
+    // directory per user_id mod 256, the incorporated version unchanged
+    val fDir = MedallionCdc.featuresDir(root)
+    val stored = ManifestSnapshots.readLatest(spark, fDir)
+      .withColumn("user_partition", format_string("%02x", pmod(col("user_id"), lit(256))))
+      .localCheckpoint()
+    ManifestSnapshots.writeFull(stored, fDir, Seq("user_partition"))
+    // batch 2 re-touches stored users 100..139, in order: the refresh must
+    // read their rows back from the directories they were committed under
+    val s2 = MedallionCdc.runCycle(spark, root, stageBatch(300, 340))
+    assert(s2.mode == "incremental", s"expected an incremental refresh, got $s2")
+    val served = MedallionCdc.serveFeatures(spark, root)
+    assert(served.count() == served.select("user_id").distinct().count(),
+      "a refreshed user was committed beside its stored row")
+    val root2 = tmpDir("mcdcrulef")
+    MedallionCdc.runCycle(spark, root2, stageBatch(0, 340))
+    assertSame(served, MedallionCdc.serveFeatures(spark, root2))
+  }
+
   test("streaming ingest lands through WAP branches: exactly-once, audited, incremental ≡ full") {
     implicit val sqlCtx = spark.sqlContext
     val root = tmpDir("mcdcwap")

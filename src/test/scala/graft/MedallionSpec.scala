@@ -77,7 +77,8 @@ class MedallionSpec extends SparkSpec {
     Medallion.runCycle(spark, csv2, root)
     val after = snapshot()
 
-    val touched = (0 until 10).map(u => f"user_partition=$u%02x").toSet
+    val touched = (0L until 10L).toDF("u").select(Lakehouse.keyDir(col("u")))
+      .as[String].collect().map(p => s"user_partition=$p").toSet
     val untouched = before.keySet -- touched
     assert(untouched.nonEmpty)
     untouched.foreach { k =>
@@ -214,6 +215,33 @@ class MedallionSpec extends SparkSpec {
       .agg(max("last_ts_us")).head.getLong(0)
     assert(merged.agg(max("last_ts_us")).head.getLong(0) == freshTs,
       "the stale orphan state shadowed the fresh export")
+  }
+
+  test("an orphan inbox chunk of a crashed export loses no serving row") {
+    val root = tmpDir("med-orphan")
+    val csv = tmpDir("med-orphan-csv")
+    exportCsv(csv, lit(true))
+    Medallion.runCycle(spark, csv, root)
+    Medallion.servingExport(spark, root)
+    val before = Lakehouse.read(spark, Medallion.servingPath(root))
+      .select("walletAddress").as[String].collect().toSet
+    // a crashed export left a chunk in the inbox: stale copies of some
+    // wallets plus a wallet this run does not export at all
+    val feats = Medallion.readFeatures(spark, root)
+    val orphan = Medallion.servingDocs(feats.limit(5))
+      .withColumn("last_ts_us", col("last_ts_us") - 999999L)
+      .unionByName(Medallion.servingDocs(feats.limit(1)
+        .withColumn("user_id", lit(987654321L))))
+    Lakehouse.appendPartitioned(orphan,
+      Medallion.servingPath(root).stripSuffix("/") + ".inbox", Nil)
+    Medallion.servingExport(spark, root)
+    val docs = Lakehouse.readBucketed(spark, Medallion.servingLayout(root))
+    val after = docs.select("walletAddress").as[String].collect()
+    assert(after.length == after.toSet.size, "duplicate serving documents")
+    assert(after.toSet == before + "987654321", "a serving row was lost or not landed")
+    // every exported wallet carries its fresh document, not the stale one
+    assert(rowStrings(docs.filter(col("walletAddress") =!= "987654321")) ==
+      rowStrings(Medallion.servingDocs(Medallion.readFeatures(spark, root))))
   }
 
   test("features MERGE and serving export plan zero user-key exchanges " +
