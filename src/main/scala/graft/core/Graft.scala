@@ -77,13 +77,21 @@ object Graft {
     "spark.ui.enabled" -> "false")
 
   /** Local-only sizing — REVISIT on a cluster: master local[N] (cluster:
-    * spark-submit) and shuffle.partitions = cores (cluster: size for
+    * spark-submit), shuffle.partitions = cores (cluster: size for
     * 100 MB-1 GB post-shuffle partitions, guide §2.2, and let AQE
-    * coalesce). The 24g/-XX:+UseParallelGC JVM in build.sbt is local too
-    * (cluster: spark.executor.memory / GC per executor). */
+    * coalesce) and the leaf-file listing's parallelism = cores (cluster:
+    * the executor slot count). Spark lists a table with more than
+    * `parallelPartitionDiscovery.threshold` (32) directories in a job of
+    * one task per directory, capped by that parallelism (default 10,000),
+    * so a 256-directory key-directed table cost a 256-task job per
+    * write, registration and catalog read; capped at the slots it runs
+    * one wave and stays distributed at any scale. The
+    * 24g/-XX:+UseParallelGC JVM in build.sbt is local too (cluster:
+    * spark.executor.memory / GC per executor). */
   def localSizing(cpus: Int): Seq[(String, String)] = Seq(
     "spark.master" -> s"local[$cpus]",
-    "spark.sql.shuffle.partitions" -> cpus.toString)
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.sources.parallelPartitionDiscovery.parallelism" -> cpus.toString)
 
   /** The one session builder: every entry point, tool and test session
     * comes from here, so the verified, benched and spec-pinned plans are

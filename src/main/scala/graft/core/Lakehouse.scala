@@ -294,12 +294,15 @@ object Lakehouse {
     * that round-trips as DATE/INT (a day-grain '2024-01-07', an all-digit
     * bucket directory) would come back as a DATE/INT column — the next
     * appendBucketed would fail ANSI store assignment, spark.table vs path
-    * reads would disagree, and a rewrite would lose the leading zeros. */
+    * reads would disagree, and a rewrite would lose the leading zeros.
+    * [[Graft.session]] pins inference off; this only checks the pin, so
+    * a registration never writes session state a concurrent query sees. */
   private def writtenSchema(spark: SparkSession, path: String): StructType = {
     val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val saved = spark.conf.getOption(inferKey)
-    try { spark.conf.set(inferKey, "false"); spark.read.parquet(path).schema }
-    finally { saved.fold(spark.conf.unset(inferKey))(spark.conf.set(inferKey, _)) }
+    require(spark.conf.getOption(inferKey).contains("false"),
+      s"$inferKey must be false (Graft.session pins it) to read $path's " +
+        s"partition columns as written; got ${spark.conf.getOption(inferKey)}")
+    spark.read.parquet(path).schema
   }
 
   /** A path read under [[writtenSchema]]. */
@@ -712,8 +715,9 @@ object Lakehouse {
     * under another directory rule) takes this merge as its one-time
     * [[migrateToBucketed]] upgrade: one whole-table rewrite of the merged
     * rows, never a corrupting half-bucketed write. MSCK after the swap registers
-    * any NEW hive partitions the merge created; its listing is O(partition
-    * dirs), which the key-directory scheme bounds at 256. */
+    * any NEW hive partitions the merge created; its listing's work is
+    * O(partition dirs), which the key-directory scheme bounds at 256, and
+    * its tasks are capped at the session's slots ([[Graft.localSizing]]). */
   def mergeUpsertBucketed(
       spark: SparkSession,
       updates: DataFrame,

@@ -128,6 +128,28 @@ class BucketingSpec extends SparkSpec {
     assert(spark.table("bm_t8b").count() == 100)
   }
 
+  test("re-registration requires partition-type inference off and leaves the conf as it is") {
+    val dir = tmpDir("infer-pin")
+    val df = spark.range(100).selectExpr("id AS k", "format_string('%02d', id % 3) AS dp")
+    val t = BucketedTable("ip_t", dir, "k", 4, partitionCols = Seq("dp"))
+    Lakehouse.ctasBucketed(df, t)
+    spark.sql("DROP TABLE ip_t")
+    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    // a session of its own, so the suite's shared conf is never flipped
+    val inferring = spark.newSession()
+    inferring.conf.set(inferKey, "true")
+    val ex = intercept[IllegalArgumentException] {
+      Lakehouse.ensureBucketedTable(inferring, t)
+    }
+    assert(ex.getMessage.contains(inferKey))
+    assert(inferring.conf.get(inferKey) == "true")
+    assert(!spark.catalog.tableExists("ip_t"))
+    // under the pinned conf the "00".."02" directories stay strings
+    assert(Lakehouse.ensureBucketedTable(spark, t))
+    assert(spark.table("ip_t").schema("dp").dataType.typeName == "string")
+    assert(spark.table("ip_t").select("dp").distinct().count() == 3)
+  }
+
   test("same-key bucketed tables join and aggregate with zero exchanges") {
     val events = Graft.table(spark, sf, "events")
       .select(col("user_id"), col("value"), col("event_type"))

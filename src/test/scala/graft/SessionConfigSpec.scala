@@ -21,7 +21,8 @@ class SessionConfigSpec extends SparkSpec {
     "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.ui.enabled" -> "false")
   private val localFour = Map(
-    "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4")
+    "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.sources.parallelPartitionDiscovery.parallelism" -> "4")
 
   private def mismatches(s: org.apache.spark.sql.SparkSession,
       expected: Map[String, String]): Map[String, Option[String]] =
