@@ -29,6 +29,9 @@ import org.apache.spark.sql.types.StructType
   *  - S11 layout-preserving compaction          -> [[compactBucketed]], [[compactLayout]]
   *  - plain-to-bucketed upgrade                 -> [[migrateToBucketed]]
   *
+  * A layer's independent per-table loads run at once through
+  * [[concurrently]].
+  *
   * One hashing axis: a [[BucketedTable.keyDirected]] table takes its hive
   * directory from the key's bucket hash ([[keyDir]]), so each directory
   * holds exactly one bucket and a write leaves at most one file per
@@ -104,9 +107,25 @@ object Lakehouse {
     t.keyDirCol.fold(df)(d => df.withColumn(d, keyDir(col(t.key))))
 
   /** The key directories `rows` fall in under `t`'s rule — the touched set
-    * of a MERGE of `rows` into `t`. */
+    * of a MERGE of `rows` into `t`. The keys are made distinct first: over
+    * rows clustered by the key (a scan bucketed on it, or rows aligned to
+    * the buckets) that needs no exchange, and the scan keeps one task per
+    * bucket. */
   def keyDirsOf(rows: DataFrame, t: BucketedTable): Seq[String] =
-    rows.select(keyDir(col(t.key))).distinct().collect().map(_.getString(0)).toSeq
+    rows.select(col(t.key)).distinct().select(keyDir(col(t.key))).distinct()
+      .collect().map(_.getString(0)).toSeq
+
+  /** `stored` (a [[readBucketed]] of the key-directed table `t`) narrowed to
+    * the key directories `rows` fall in ([[keyDirsOf]]): every stored row
+    * sharing a key with `rows`, read from those directories only — the
+    * reference's `partition IN chunk` state read (features_pipeline.py:
+    * 111-113). A table not in `t`'s layout yet (its next writer migrates
+    * it) is returned whole: its directories follow another rule. */
+  def inKeyDirsOf(stored: DataFrame, rows: DataFrame, t: BucketedTable): DataFrame = {
+    require(t.keyDirected, s"${t.name} has no key directory")
+    if (!ensureBucketedTable(stored.sparkSession, t)) stored
+    else stored.filter(col(t.keyDirCol.get).isin(keyDirsOf(rows, t): _*))
+  }
 
   /** Bucket count of the two DAGs' bucketed facts and feature tables. 32
     * matches the local harness parallelism; the count is recorded beside
@@ -133,6 +152,42 @@ object Lakehouse {
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** Most units [[concurrently]] runs at once: the widest layer, the domain
+    * stage's seven tables. */
+  private val MaxConcurrentUnits = 7
+
+  /** Run a layer's independent per-table units at once, so their Spark jobs
+    * share the slots instead of queueing behind each other: one named
+    * daemon thread per unit (at most [[MaxConcurrentUnits]]), a fresh pool
+    * per call. Waits for every unit; a failed unit does not cancel the
+    * others, so each unit that succeeds has committed when this returns or
+    * throws. Rethrows the first failure in unit order, the later ones
+    * attached as suppressed. Units must not read each other's output or
+    * create the same catalog entry. */
+  def concurrently(units: Seq[() => Unit]): Unit = if (units.nonEmpty) {
+    import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+    val seq = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = Executors.newFixedThreadPool(math.min(units.size, MaxConcurrentUnits),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-concurrently-${seq.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    try {
+      val running = units.map(u => pool.submit(new Callable[Unit] { def call(): Unit = u() }))
+      val failures = running.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
+  }
 
   /** S5: CREATE TABLE AS SELECT — full (re)materialization, snappy parquet,
     * hive-partitioned. Repartition by the partition columns first so each
@@ -413,22 +468,25 @@ object Lakehouse {
         partitionCols.headOption.getOrElse(watermarkCol)) match {
       case None => ctasBucketed(full(), t)
       case Some(wm) =>
-        val newRows = incremental(wm)
-        // same null-safe identity guard as antiJoinAppend, key-pruned
-        // scan — ALSO partition-pruned to the batch's own partitions
-        // (sound because the identity keys carry the partition columns;
-        // see batchPartitionPrune)
-        val fresh = absentFrom(spark, newRows, t.path, keys,
-          batchPartitionPrune(newRows, partitionCols, keys))
-        if (registered) appendBucketed(fresh, t)
-        else
-          // LEGACY lake: the path holds a plain (pre-bucketing) layout the
-          // catalog refuses to register. appendBucketed would CREATE a
-          // warehouse-located table holding only this delta while path
-          // readers keep the old files — silent data loss. Keep appending
-          // plain (readers fall back to the path read) until the layout is
-          // upgraded once via [[migrateToBucketed]].
-          appendPartitioned(fresh, t.path, partitionCols)
+        // computed once: the partition probe and the append both read it
+        val newRows = incremental(wm).persist()
+        try {
+          // same null-safe identity guard as antiJoinAppend, key-pruned
+          // scan — ALSO partition-pruned to the batch's own partitions
+          // (sound because the identity keys carry the partition columns;
+          // see batchPartitionPrune)
+          val fresh = absentFrom(spark, newRows, t.path, keys,
+            batchPartitionPrune(newRows, partitionCols, keys))
+          if (registered) appendBucketed(fresh, t)
+          else
+            // LEGACY lake: the path holds a plain (pre-bucketing) layout the
+            // catalog refuses to register. appendBucketed would CREATE a
+            // warehouse-located table holding only this delta while path
+            // readers keep the old files — silent data loss. Keep appending
+            // plain (readers fall back to the path read) until the layout is
+            // upgraded once via [[migrateToBucketed]].
+            appendPartitioned(fresh, t.path, partitionCols)
+        } finally newRows.unpersist()
     }
   }
 
@@ -846,9 +904,12 @@ object Lakehouse {
     watermark(spark, path, watermarkCol, partitionCols.headOption.getOrElse(watermarkCol)) match {
       case None    => ctas(full(), path, partitionCols)
       case Some(w) =>
-        val batch = incremental(w)
-        antiJoinAppend(spark, batch, path, keys, partitionCols,
+        // computed once (one draw of any nondeterministic column, such as
+        // a uuid() tag): the partition probe and the append both read it
+        val batch = incremental(w).persist()
+        try antiJoinAppend(spark, batch, path, keys, partitionCols,
           prunePartitions = batchPartitionPrune(batch, partitionCols, keys))
+        finally batch.unpersist()
     }
   }
 

@@ -102,17 +102,26 @@ object CoinBalances {
       .distinct()
   }
 
-  /** The incremental MERGE source (:133-292): the full-load program over
-    * only-new rows, accumulated into the old state. `state` is the stored
-    * coin-balances table; `walletTx` the raw feed (the scalar-subquery
-    * watermark is applied here, :169-170). */
-  def incrementalUpdates(walletTx: DataFrame, state: DataFrame): DataFrame = {
+  /** The rows of `walletTx` newer than the stored `state`'s watermark
+    * (:169-170): a CROSS JOIN of the 1-row whole-table aggregate — the
+    * reference's scalar subquery (:128-132), kept in-plan instead of
+    * collected. */
+  def freshRows(walletTx: DataFrame, state: DataFrame): DataFrame = {
     val wmRow = state.agg(max("last_transaction_timestamp").as("wm"))
-    // CROSS JOIN of the 1-row watermark aggregate — the reference's scalar
-    // subquery (:128-132), kept in-plan instead of collected
-    val fresh = withDefaults(walletTx).crossJoin(broadcast(wmRow))
+    withDefaults(walletTx).crossJoin(broadcast(wmRow))
       .filter(col("block_timestamp") > col("wm")).drop("wm", "txi")
-    val ncb = fullLoad(fresh).alias("ncb")
+  }
+
+  /** The incremental MERGE source (:133-292): the full-load program over
+    * only-new rows ([[freshRows]]), accumulated into the old state. `state`
+    * is the stored coin-balances table; `walletTx` the raw feed. The
+    * watermark reads all of `state`; the two state joins read `matchable`
+    * when given — any subset of `state` holding every row of the fresh
+    * rows' wallets (the domain DAG passes their key directories). */
+  def incrementalUpdates(walletTx: DataFrame, state: DataFrame,
+      matchable: Option[DataFrame] = None): DataFrame = {
+    val ncb = fullLoad(freshRows(walletTx, state)).alias("ncb")
+    val joined = matchable.getOrElse(state)
 
     // :250-257 — per-CONTRACT max stored timestamp over wallets that have
     // new data (EXISTS pruning via semi join). The reference computes it as
@@ -124,12 +133,12 @@ object CoinBalances {
     // token universe (decimals>0 contracts + 'ETH'), tens of MB at 100 TB.
     // The per-pair form's implicit "pair ∈ state" marker (ltt_last NULL for
     // new pairs) is recovered from the lcb join's own match below.
-    val ltt = broadcast(state
+    val ltt = broadcast(joined
       .join(ncb.select(col("wallet_address")).distinct(), Seq("wallet_address"), "left_semi")
       .groupBy(col("contract_address").as("ltt_contract"))
       .agg(max("last_transaction_timestamp").as("ltt_last")))
 
-    val lcb = state.alias("lcb")
+    val lcb = joined.alias("lcb")
     def nvl0(c: Column) = coalesce(c, lit(0.0))
     def nvl0L(c: Column) = coalesce(c, lit(0L))
     ncb

@@ -58,7 +58,9 @@ object DomainPipeline {
 
   /** STAGE: each raw table present in the lake flows through its cleaner
     * behind the per-table watermark switch. Logs get the topics repair on
-    * the way in (ethereum_logs.sql:15-19). */
+    * the way in (ethereum_logs.sql:15-19). No stage table reads another,
+    * so the loads run at once ([[Lakehouse.concurrently]]), like the
+    * reference DAG's per-table tasks (dag_ethereum_wallet_transactions.py). */
   def stage(spark: SparkSession, lake: String): Unit = {
     val cleaners: Seq[(String, DataFrame => DataFrame)] = Seq(
       "ethereum_blocks" -> StageCleaners.cleanBlocks,
@@ -69,12 +71,11 @@ object DomainPipeline {
       "ethereum_traces" -> StageCleaners.cleanTraces,
       "ethereum_contracts" -> StageCleaners.cleanContracts,
       "ethereum_tokens_metadata" -> StageCleaners.cleanTokensMetadata)
-    cleaners.foreach { case (t, clean) =>
-      val raw = s"$lake/raw/$t"
-      if (exists(spark, raw))
-        StageCleaners.stageLoad(spark, t, Lakehouse.read(spark, raw),
+    Lakehouse.concurrently(cleaners.collect {
+      case (t, clean) if exists(spark, s"$lake/raw/$t") => () =>
+        StageCleaners.stageLoad(spark, t, Lakehouse.read(spark, s"$lake/raw/$t"),
           s"$lake/stage", clean)
-    }
+    })
   }
 
   private def stageOrEmpty(spark: SparkSession, lake: String, table: String,
@@ -217,11 +218,22 @@ object DomainPipeline {
     * wallet-clustered, the ENTIRE incremental cycle — update computation
     * AND the merge's full-outer join — plans zero wallet-key exchanges
     * (DomainPipelineSpec asserts it on the executed plan); each cycle's
-    * cost is the touched partitions' scan + rewrite, not a table shuffle. */
+    * cost is the touched partitions' scan + rewrite, not a table shuffle.
+    *
+    * The two tables are independent branches and run at once
+    * ([[Lakehouse.concurrently]]). On the incremental path each branch
+    * reads its stored state only from the wallet directories its own delta
+    * falls in ([[Lakehouse.inKeyDirsOf]], the reference's per-chunk
+    * `partition IN chunk` read): the new fact files for wallet features,
+    * the fact rows newer than the coin-balance watermark for coin
+    * balances. Only the two whole-table watermark aggregates read every
+    * directory. */
   def features(spark: SparkSession, lake: String,
       prices: Option[DataFrame] = None): Unit = {
     // bucketed catalog read: the feature programs' wallet windows/rollups
-    // run directly on the scan's wallet clustering — no exchange
+    // run directly on the scan's wallet clustering — no exchange. Taken
+    // (and on a fresh catalog registered) before the fork: both branches
+    // read the fact, and one thread creates its catalog entry
     val wtx = readWalletTx(spark, lake)
     val metaP = stagePath(lake, "ethereum_tokens_metadata")
     val gate =
@@ -229,7 +241,14 @@ object DomainPipeline {
         Some(Lakehouse.read(spark, metaP).filter(col("decimals") > 0)
           .select(col("contract_address").as("contract_address_metadata")).distinct())
       else None
+    Lakehouse.concurrently(Seq(
+      () => walletFeaturesLoad(spark, lake, wtx, prices, gate),
+      () => coinBalancesLoad(spark, lake, wtx)))
+  }
 
+  /** The wallet-features branch of [[features]]. */
+  private def walletFeaturesLoad(spark: SparkSession, lake: String, wtx: DataFrame,
+      prices: Option[DataFrame], gate: Option[DataFrame]): Unit = {
     val fT = featuresLayout(lake)
     // the fact's file set, captured ONCE: the delta diff and the post-
     // merge ledger must describe the same snapshot of the fact
@@ -244,6 +263,7 @@ object DomainPipeline {
       writeCdcLedger(spark, lake, factFiles)
     } else {
       val stored = readFeatures(spark, lake)
+      // the reference's whole-table scalar subquery
       val wm = stored.agg(max("wallet_last_tx")).head.getLong(0)
       // CDC-first delta: fresh fact files (file-set diff vs the ledger),
       // watermark-filtered for idempotence — row-identical to the
@@ -267,20 +287,25 @@ object DomainPipeline {
       // aligned to the target's bucket layout BEFORE the cache, so the
       // merge's full-outer join plans zero exchanges (free when the rollup
       // already ends wallet-partitioned at the bucket count; the CDC file read
-      // pays one delta-sized shuffle here)
-      val updates = Lakehouse.alignToBuckets(WalletFeatures
-        .incrementalUpdates(newTx, stored, prices, gate, dayUnit = 86400L), fT)
+      // pays one delta-sized shuffle here). The stored state is only semi-
+      // joined on the delta's wallets: it is read from their directories
+      val updates = Lakehouse.alignToBuckets(WalletFeatures.incrementalUpdates(
+          newTx, Lakehouse.inKeyDirsOf(stored, newTx, fT), prices, gate,
+          dayUnit = 86400L), fT)
         .persist()
       // :760-833 — whole-row update by wallet; mergeUpsertBucketed IS that
       // MERGE, over the wallet-bucketed target, scoped to the directories
       // the (persisted, small) updates touch: O(delta), never O(table)
-      Lakehouse.mergeUpsertBucketed(spark, updates, fT, Seq("wallet_address"))
-      updates.unpersist()
+      try Lakehouse.mergeUpsertBucketed(spark, updates, fT, Seq("wallet_address"))
+      finally updates.unpersist()
       // ledger LAST: a crash before this line leaves the old ledger, and
       // the replayed delta filters to empty rows behind the watermark
       writeCdcLedger(spark, lake, factFiles)
     }
+  }
 
+  /** The coin-balances branch of [[features]]. */
+  private def coinBalancesLoad(spark: SparkSession, lake: String, wtx: DataFrame): Unit = {
     val cT = coinBalancesLayout(lake)
     if (!exists(spark, cT.path)) {
       Lakehouse.ctasBucketed(CoinBalances.fullLoad(wtx), cT)
@@ -288,13 +313,16 @@ object DomainPipeline {
       val stored = readCoinBalances(spark, lake)
       // the column-selective MERGE (:297-310): matched rows keep stored
       // token_symbol / has_negative_balance. The (wallet, contract) key
-      // rides the wallet-only bucketing via subset co-partitioning.
-      val updates = Lakehouse.alignToBuckets(
-        CoinBalances.incrementalUpdates(wtx, stored), cT).persist()
-      Lakehouse.mergeUpsertBucketed(spark, updates, cT,
+      // rides the wallet-only bucketing via subset co-partitioning. The
+      // state joins read the directories of this branch's own fresh rows
+      // (the fact rows newer than its watermark)
+      val updates = Lakehouse.alignToBuckets(CoinBalances.incrementalUpdates(wtx, stored,
+          Some(Lakehouse.inKeyDirsOf(stored, CoinBalances.freshRows(wtx, stored), cT))), cT)
+        .persist()
+      try Lakehouse.mergeUpsertBucketed(spark, updates, cT,
         Seq("wallet_address", "contract_address"),
         keepFromTarget = Set("token_symbol", "has_negative_balance"))
-      updates.unpersist()
+      finally updates.unpersist()
     }
   }
 
@@ -321,7 +349,8 @@ object DomainPipeline {
     * corpus-level HEURISTIC that false-positives on small lakes (2
     * wallets, one legitimately at zero = 50%); it stays available via
     * [[graft.quality.DataQuality.walletFeatureConstraints]] for
-    * operators to gate at corpus scale. Throws on any violation,
+    * operators to gate at corpus scale. The three checks run at once
+    * ([[graft.quality.DataQuality.gate]]). Throws on any violation,
     * failing the run the way the DAG alerts + fails. */
   def qualityGate(spark: SparkSession, lake: String): Unit = {
     import graft.quality.DataQuality
@@ -346,13 +375,15 @@ object DomainPipeline {
     * gets the bin-pack rewrite); the wallet-tx fact takes
     * [[Lakehouse.compactBucketed]] (each incremental cycle adds one file
     * per touched (bucket, date) — after a week that is 7 files per bucket;
-    * compaction folds them back to one). Returns whether it ran. */
+    * compaction folds them back to one). The three tables compact at once
+    * ([[Lakehouse.concurrently]]). Returns whether it ran. */
   def weeklyMaintain(spark: SparkSession, lake: String,
       today: java.time.LocalDate): Boolean =
     today.getDayOfWeek == java.time.DayOfWeek.SUNDAY && {
-      Lakehouse.compactLayout(spark, featuresLayout(lake))
-      Lakehouse.compactLayout(spark, coinBalancesLayout(lake))
-      Lakehouse.compactBucketed(spark, walletTxLayout(lake))
+      Lakehouse.concurrently(Seq(
+        () => Lakehouse.compactLayout(spark, featuresLayout(lake)),
+        () => Lakehouse.compactLayout(spark, coinBalancesLayout(lake)),
+        () => Lakehouse.compactBucketed(spark, walletTxLayout(lake))))
       true
     }
 }

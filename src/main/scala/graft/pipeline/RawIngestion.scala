@@ -108,8 +108,9 @@ object RawIngestion {
       .withColumnRenamed("b_hash", "block_hash")
       .withColumn("date_partition", datePartition(col("block_timestamp")))
 
-  /** The whole raw layer: exporter CSVs → the four enriched raw tables,
-    * appended as date-partitioned parquet under `$lake/raw/`. */
+  /** The whole raw layer: exporter CSVs → the enriched raw tables,
+    * appended as date-partitioned parquet under `$lake/raw/`, all tables
+    * at once ([[graft.core.Lakehouse.concurrently]]). */
   def ingest(spark: org.apache.spark.sql.SparkSession, csvDir: String, lake: String): Unit = {
     import graft.core.{Lakehouse, Schemas}
     def read(name: String, schema: org.apache.spark.sql.types.StructType) =
@@ -143,9 +144,10 @@ object RawIngestion {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) Some(table -> read(file, schema)) else None
     }
-    (out ++ optionalOut).foreach { case (table, df) =>
-      Lakehouse.appendPartitioned(df, s"$lake/raw/$table", Seq("date_partition"))
-    }
-    blocks.unpersist()
+    // the tables are independent: their appends share the slots at once
+    try Lakehouse.concurrently((out ++ optionalOut).toSeq.map { case (table, df) =>
+      () => Lakehouse.appendPartitioned(df, s"$lake/raw/$table", Seq("date_partition"))
+    })
+    finally blocks.unpersist()
   }
 }

@@ -559,6 +559,12 @@ object WalletFeatures {
       col("wallet_address").as("w2"),
       col("old_wallet_bal_eth"), col("old_wallet_min"), col("old_wallet_max")).alias("lcb2")
 
+    // the state joins stay shuffle joins (`merge` hints) even when the
+    // stored state handed in is small (a caller may pass only the delta's
+    // directories): the fresh rows then take the state's wallet
+    // partitioning, and the carry-forward UNION below unions two sides of
+    // one partitioning instead of appending the fresh rows' partitions to
+    // the state's
     val fresh = withDefaults(fresh0)
       .withColumn("price_eff",
         coalesce(col("price"),
@@ -569,10 +575,10 @@ object WalletFeatures {
           col("old_bal_c"), col("old_bal_ec"), col("old_min_ec"), col("old_max_ec"),
           col("old_in_ec"), col("old_out_ec"), col("old_fee"),
           col("old_in_cnt"), col("old_out_cnt"), col("old_tx_cnt"),
-          col("old_first_ts"), col("old_last_ts")),
+          col("old_first_ts"), col("old_last_ts")).hint("merge"),
         col("wallet_address") === col("lw") && col("contract_address") === col("lc"),
         "left_outer").drop("lw", "lc")
-      .join(lcb2, col("wallet_address") === col("w2"), "left_outer").drop("w2")
+      .join(lcb2.hint("merge"), col("wallet_address") === col("w2"), "left_outer").drop("w2")
 
     val signedNative = when(col("role") === "sender", -col("amount") - col("tx_fee"))
       .otherwise(col("amount"))

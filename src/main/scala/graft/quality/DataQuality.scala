@@ -277,13 +277,15 @@ object DataQuality {
     zOpt
   }
 
-  /** Run checks; throw (failing the pipeline run, as the DAG does) if any
-    * violations surface. */
+  /** Run checks, all at once ([[graft.core.Lakehouse.concurrently]]); throw
+    * (failing the pipeline run, as the DAG does) if any violations surface,
+    * naming every failed check in order. */
   def gate(checks: Seq[(String, DataFrame)]): Unit = {
-    val bad = checks.flatMap { case (name, df) =>
-      val n = df.limit(1).count()
-      if (n > 0) Some(name) else None
-    }
+    val failed = new Array[Boolean](checks.size)
+    graft.core.Lakehouse.concurrently(checks.zipWithIndex.map { case ((_, df), i) =>
+      () => failed(i) = df.limit(1).count() > 0
+    })
+    val bad = checks.zip(failed).collect { case ((name, _), true) => name }
     require(bad.isEmpty, s"data-quality gate failed: ${bad.mkString(", ")}")
   }
 }
